@@ -23,6 +23,7 @@ from collections.abc import Callable
 from pyspark.sql import SparkSession
 
 from etl_pipeline_candy_store_spark.plans.candy_pipeline import (
+    OUTPUT_ORDER,
     CandyConfig,
     CandyPipeline,
 )
@@ -61,23 +62,24 @@ def task_process(spark: SparkSession, cfg: CandyConfig, ckpt: str) -> None:
     orders = pipe.order_aggregates(lines)
     summary = pipe.daily_summary(orders)
     summary.write.mode("overwrite").parquet(_ckpt(ckpt, "daily_summary"))
-    save_single_csv(pipe.orders_output(orders), cfg.output_dir, "orders.csv")
-    save_single_csv(
-        pipe.order_line_items_output(lines), cfg.output_dir, "order_line_items.csv"
-    )
-    save_single_csv(
-        summary.orderBy("date"), cfg.output_dir, "daily_summary.csv"
-    )
-    save_single_csv(
-        pipe.products_updated(lines), cfg.output_dir, "products_updated.csv"
-    )
+    frames = {
+        "orders": pipe.orders_output(orders),
+        "order_line_items": pipe.order_line_items_output(lines),
+        "daily_summary": summary,
+        "products_updated": pipe.products_updated(lines),
+    }
+    for name, df in frames.items():
+        save_single_csv(df, cfg.output_dir, f"{name}.csv", OUTPUT_ORDER[name])
 
 
 def task_forecast(spark: SparkSession, cfg: CandyConfig, ckpt: str) -> None:
     pipe = CandyPipeline(spark, cfg)
     summary = spark.read.parquet(_ckpt(ckpt, "daily_summary"))
     save_single_csv(
-        pipe.forecast(summary), cfg.output_dir, "sales_profit_forecast.csv"
+        pipe.forecast(summary),
+        cfg.output_dir,
+        "sales_profit_forecast.csv",
+        OUTPUT_ORDER["sales_profit_forecast"],
     )
 
 

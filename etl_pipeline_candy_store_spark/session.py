@@ -17,6 +17,12 @@ from pyspark.sql import SparkSession
 #: Defaults chosen for scale:
 #: - AQE coalesces the 200-default shuffle partitions down to what the data
 #:   actually needs, and splits skewed partitions at join time.
+#: - AQE also coalesces inside cached plans. Spark keeps a cached plan's
+#:   shuffle partition count by default, so a cached frame (the candy
+#:   allocation spine, curate()'s stage caches) would otherwise run and
+#:   be rescanned at ``shuffle.partitions`` tasks however few rows it
+#:   holds. Coalescing only merges whole hash partitions, so a key's rows
+#:   still land in one task (tests/test_aqe_colocation.py).
 #: - ``shuffle.partitions`` is only the *initial* number under AQE; at 100 TB
 #:   you would raise it (rule of thumb: total shuffle bytes / 128 MiB) — AQE
 #:   then coalesces, so overshooting is cheap and undershooting is not.
@@ -25,6 +31,7 @@ _SCALE_CONF = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",

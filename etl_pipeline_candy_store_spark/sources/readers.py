@@ -34,11 +34,16 @@ def read_transactions_json(spark: SparkSession, paths: str | list[str]) -> DataF
     per-day driver loop.
 
     Ordering contract: allocation (ST1) is order-sensitive within a day
-    (SURVEY §2.9). multiLine JSON files are unsplittable — each file is
-    exactly one input partition — so ``monotonically_increasing_id`` is
-    monotone in array order within a file. ``file_seq`` is therefore a
-    valid intra-day sequence when each day is one file; cross-day order
-    comes from ``business_date``.
+    (SURVEY §2.9). multiLine JSON files are unsplittable, so a file is
+    never split across input partitions, but Spark packs several small
+    files into one partition (``spark.sql.files.maxPartitionBytes``,
+    ``openCostInBytes``): ten small day files typically read as 4
+    partitions. A partition reads its files one after another, so
+    ``monotonically_increasing_id`` is monotone in array order within
+    each file, but not ordered by day across files (Spark orders a
+    partition's files by size).
+    ``file_seq`` is therefore a valid intra-day sequence when each day is
+    one file; cross-day order comes from ``business_date``.
 
     Adds: ``business_date`` (from the ISO timestamp; the original string
     is preserved untouched for output parity) and ``file_seq``.

@@ -11,18 +11,32 @@ from __future__ import annotations
 import glob
 import os
 import shutil
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 
 
-def save_single_csv(df: DataFrame, output_dir: str, filename: str) -> str:
+def save_single_csv(
+    df: DataFrame,
+    output_dir: str,
+    filename: str,
+    order_by: Sequence[str] = (),
+) -> str:
     """S7 — write ``df`` as ONE csv file with header at
-    ``output_dir/filename``. Single-task write: only for small outputs."""
+    ``output_dir/filename``. Single-task write: only for small outputs.
+
+    ``order_by`` sorts the rows inside the file's one partition. A
+    global ``orderBy`` on ``df`` would give the same file but costs a
+    range-sampling job and a range exchange; Spark drops a global sort
+    that sits below this local one, so ``df`` may arrive already
+    ordered by the same keys."""
     os.makedirs(output_dir, exist_ok=True)
     tmp = os.path.join(output_dir, f"_tmp_{filename.replace('.', '_')}")
+    one = df.coalesce(1)
+    if order_by:
+        one = one.sortWithinPartitions(*order_by)
     (
-        df.coalesce(1)
-        .write.mode("overwrite")
+        one.write.mode("overwrite")
         .option("header", True)
         .csv(tmp)
     )

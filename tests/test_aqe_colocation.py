@@ -2,21 +2,25 @@
 
 allocate_sequential's correctness rests on "every key's rows are in
 exactly ONE task" — via its own repartition(keys) or a bucketed scan.
-Two AQE mechanisms could in principle re-split partitions at runtime:
-skew-join splitting (OptimizeSkewedJoin) and partition coalescing /
-rebalance skew-splitting. Spark exempts both paths this operator uses:
+AQE rewrites partitions at runtime in three ways, and none of them
+breaks the invariant:
 
-- a user repartition(cols) has shuffle origin REPARTITION_BY_COL, which
-  AQE's coalescing and skew rules leave alone (they only touch
-  ENSURE_REQUIREMENTS and REBALANCE_* shuffles);
-- skew-JOIN splitting rewrites SortMergeJoin/ShuffledHashJoin reads,
-  and the allocation stage is mapInPandas, not a join;
+- partition coalescing DOES apply to a user repartition(cols)
+  (shuffle origin REPARTITION_BY_COL), and, since the session sets
+  ``canChangeCachedPlanOutputPartitioning``, to cached plans too: the
+  candy allocation's 32 hash partitions read as 3 tasks over its 73,933
+  request lines. Coalescing only merges whole, adjacent hash
+  partitions and never splits one, so each key still lands in one task;
+- skew splitting touches only REBALANCE_* shuffles
+  (optimizeSkewsInRebalancePartitions) and SortMergeJoin/ShuffledHashJoin
+  reads (skew-join), and the allocation stage is a repartition feeding
+  mapInPandas, not a rebalance or a join;
 - the bucketed-input path has NO exchange for AQE to rewrite at all
   (and autoBucketedScan is forced off so the scan stays bucketed).
 
 These tests force the most aggressive skew/coalesce settings and assert
 the one-task-per-key invariant and result equality anyway — so a Spark
-upgrade that changes the exemptions fails HERE, not as silent stock
+upgrade that changes these rules fails HERE, not as silent stock
 corruption at scale."""
 
 from __future__ import annotations
@@ -128,3 +132,46 @@ def test_bucketed_path_identical_under_aggressive_aqe(spark, aggressive_aqe):
         assert got == want
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+
+
+def test_cached_allocation_coalesced_one_task_per_key(spark, aggressive_aqe):
+    # a cached allocation keeps AQE's coalesced partitioning (the
+    # session's canChangeCachedPlanOutputPartitioning): 32 hash
+    # partitions merge into fewer, each holding several keys, and still
+    # no key spans two partitions and the result is unchanged
+    extra = {
+        "spark.sql.shuffle.partitions": "32",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "256KB",
+        "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
+    }
+    saved = {k: spark.conf.get(k, None) for k in extra}
+    for k, v in extra.items():
+        spark.conf.set(k, v)
+    cached = allocate_sequential(_skewed(spark), **_KW).cache()
+    try:
+        got = sorted(map(tuple, cached.collect()))
+        n_parts = cached.rdd.getNumPartitions()
+        split_keys = (
+            cached.select("key", F.spark_partition_id().alias("pid"))
+            .groupBy("key")
+            .agg(F.countDistinct("pid").alias("n_pids"))
+            .where(F.col("n_pids") > 1)
+            .count()
+        )
+    finally:
+        cached.unpersist()
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert 1 < n_parts < 32
+    assert split_keys == 0
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        want = sorted(
+            map(tuple, allocate_sequential(_skewed(spark), **_KW).collect())
+        )
+    finally:
+        spark.conf.unset("spark.sql.adaptive.enabled")
+    assert got == want

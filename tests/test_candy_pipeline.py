@@ -186,10 +186,120 @@ def test_save_outputs_single_files(pipeline):
         with open(p) as f:
             header = f.readline().strip()
         assert "," in header
-    with open(paths["orders"]) as f:
-        rows = list(csv.DictReader(f))
-    ids = [int(r["order_id"]) for r in rows]
-    assert ids == sorted(ids)
+    # each file is sorted by its OUTPUT_ORDER keys inside its one
+    # partition, with no global sort in the plan
+    sort_keys = {
+        "orders": lambda r: int(r["order_id"]),
+        "order_line_items": lambda r: (int(r["order_id"]), int(r["product_id"])),
+        "daily_summary": lambda r: r["date"],
+        "products_updated": lambda r: int(r["product_id"]),
+    }
+    for name, key in sort_keys.items():
+        with open(paths[name]) as f:
+            keys = [key(r) for r in csv.DictReader(f)]
+        assert len(keys) > 1, name
+        assert keys == sorted(keys), name
+
+
+#: Spark jobs one save_outputs() pass over the fixture runs: 3 for the
+#: allocation's skew probe, then one per AQE shuffle stage plus the write
+#: for each output. No write may run a range-sampling job: a global
+#: orderBy under each write adds one and its exchange stage (31 jobs).
+SAVE_OUTPUTS_MAX_JOBS = 21
+
+
+def test_save_outputs_right_sized(spark, pipeline, monkeypatch):
+    """The pass stays right-sized: its job count does not grow back, and
+    the cached spine keeps AQE's coalesced partitioning instead of
+    ``spark.sql.shuffle.partitions`` tasks for a few hundred rows."""
+    from etl_pipeline_candy_store_spark.plans import candy_pipeline
+
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+
+    def cached_rdds():
+        return {
+            i.id(): i.numPartitions() for i in jsc.getRDDStorageInfo()
+        }
+
+    before = set(cached_rdds())
+    seen: dict[int, int] = {}
+    real_save = candy_pipeline.save_single_csv
+
+    def save_and_look(*args):
+        path = real_save(*args)
+        seen.update(cached_rdds())
+        return path
+
+    monkeypatch.setattr(candy_pipeline, "save_single_csv", save_and_look)
+    group = "test_save_outputs_right_sized"
+    sc.setJobGroup(group, group)
+    try:
+        pipeline.save_outputs()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= SAVE_OUTPUTS_MAX_JOBS, n_jobs
+    spine = [n for rdd, n in seen.items() if rdd not in before]
+    shuffle_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert len(spine) == 1, seen
+    assert spine[0] < shuffle_partitions
+
+
+def test_packed_day_files_keep_sequence(spark, pipeline, fixture_dir):
+    """Several day files packed into ONE input partition: ``file_seq`` is
+    still monotone in array order within each file, and the allocation
+    equals the one read with a partition per file."""
+    from etl_pipeline_candy_store_spark.sources.readers import (
+        read_transactions_json,
+    )
+
+    paths = pipeline.config.transactions_paths
+    packed = {
+        "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
+        "spark.sql.files.openCostInBytes": "0",
+        "spark.sql.files.minPartitionNum": "1",
+    }
+    spread = {"spark.sql.files.openCostInBytes": str(128 * 1024 * 1024)}
+
+    def under(conf, fn):
+        saved = {k: spark.conf.get(k, None) for k in conf}
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        try:
+            return fn()
+        finally:
+            for k, v in saved.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+
+    def read():
+        df = read_transactions_json(spark, paths).select(
+            "transaction_id", "file_seq", F.input_file_name().alias("file")
+        )
+        return df.rdd.getNumPartitions(), df.collect()
+
+    n_parts, rows = under(packed, read)
+    assert len(paths) > 1 and n_parts == 1
+    assert under(spread, read)[0] == len(paths)
+    by_file: dict[str, list] = {}
+    for r in sorted(rows, key=lambda r: r["file_seq"]):
+        by_file.setdefault(os.path.basename(r["file"]), []).append(
+            r["transaction_id"]
+        )
+    for p in paths:
+        with open(p) as f:
+            in_array_order = [t["transaction_id"] for t in json.load(f)]
+        assert by_file.get(os.path.basename(p), []) == in_array_order, p
+
+    def allocation():
+        # file_seq values depend on the packing; the allocation must not
+        cols = ["order_id", "item_pos", "quantity", "cancelled", "stock_after"]
+        return sorted(map(tuple, pipeline.allocated_lines().select(cols).collect()))
+
+    assert under(packed, allocation) == under(spread, allocation)
 
 
 def test_forecast_deterministic(pipeline):

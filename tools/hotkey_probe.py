@@ -15,6 +15,9 @@ every prior line — a semantic bound, not an implementation one):
 
     SPARK_GRAFT_DRIVER_MEM=32g python tools/hotkey_probe.py [total_rows] [n_buckets]
 
+``SPARK_GRAFT_CPUS`` sets the ``local[N]`` core count (default 32); the
+report records it as ``cpus``.
+
 The crossover is where the hot key's SERIAL loop time (~1M rows/s/core)
 outgrows the bucketed plan's extra full-data passes (checkpoint + range
 join + window): on local[32] that is hot keys of a few million rows —
@@ -82,12 +85,18 @@ def main() -> None:
     n_buckets = int(sys.argv[2]) if len(sys.argv) > 2 else 16
     from etl_pipeline_candy_store_spark.session import get_spark
 
-    spark = get_spark("hotkey-probe", master="local[32]")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    spark = get_spark("hotkey-probe", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
 
     hot = total // 2
     kw = dict(key_col="key", seq_cols=["seq"], qty_col="qty", stock_col="stock")
-    report = {"rows": total, "hot_share": 0.5, "n_buckets": n_buckets}
+    report = {
+        "cpus": cpus,
+        "rows": total,
+        "hot_share": 0.5,
+        "n_buckets": n_buckets,
+    }
 
     for shape, hot_stock in [
         ("no_exhaust", hot * 2),          # avg qty 2 -> never exhausts

@@ -5,7 +5,10 @@ documents expansion, with per-stage wall-time attribution, and gate the
 total on the same linear-with-slack budget family as the per-query
 probes.
 
-    python tools/pipeline_probe.py [K] [--out PIPELINE_SCALE_rN.json]
+    SPARK_GRAFT_CPUS=$(nproc) python tools/pipeline_probe.py [K] [--out PIPELINE_SCALE_rN.json]
+
+``SPARK_GRAFT_CPUS`` sets the ``local[N]`` core count (default 32); the
+result records it as ``cpus``.
 
 Why this exists when every stage's standalone twin is already probed
 (q50/q51+q54/q59/q122/q58/q201/q200/q80): composition adds costs no
@@ -109,7 +112,8 @@ def main() -> None:
     from etl_pipeline_candy_store_spark.session import get_spark
     from tools.scale_probe import expand_documents
 
-    spark = get_spark("pipeline-probe", master="local[32]")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    spark = get_spark("pipeline-probe", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
     base = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -141,6 +145,7 @@ def main() -> None:
     ratio = round(t_big / denom, 1)
     ok = t_big <= budget * denom
     result = {
+        "cpus": cpus,
         "k": k,
         "slack": SLACK,
         "floor_sec": FLOOR_SEC,
