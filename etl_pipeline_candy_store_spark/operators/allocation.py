@@ -462,6 +462,7 @@ def allocate(
     n_buckets: int = 16,
     sample_fraction: float | None = None,
     input_partitioned: bool = False,
+    max_rows: int | None = None,
 ) -> DataFrame:
     """Strategy-dispatching front door for sequential allocation: probe
     the skew shape, then run :func:`allocate_sequential` (one shuffle +
@@ -493,6 +494,13 @@ def allocate(
     at the crossover by definition. An empty/undersized sample falls
     back to the sequential path — the right default for small inputs.
 
+    ``max_rows`` is an optional upper bound on ``requests``' row count
+    that the caller knows without running a job (for the candy JSON,
+    :func:`~etl_pipeline_candy_store_spark.sources.readers.transactions_max_items`).
+    When it is below both thresholds, no key can reach the bucketed
+    path, so the probe is skipped and the sequential path is returned
+    with no eager job. None (the default) always probes.
+
     ``input_partitioned`` forwards to :func:`allocate_sequential` (see
     its layout contract — enforced there): when the facts come from a
     key-bucketed table, the sequential path plans with zero Exchange.
@@ -514,6 +522,15 @@ def allocate(
        consumed, or isolate allocation runs in their own session.
     """
     key_cols = [key_col] if isinstance(key_col, str) else list(key_col)
+    kwargs = dict(
+        key_col=key_cols, seq_cols=seq_cols, qty_col=qty_col, stock_col=stock_col
+    )
+    if max_rows is not None and max_rows < min(
+        hot_row_threshold, exhaust_hot_row_threshold
+    ):
+        return allocate_sequential(
+            requests, input_partitioned=input_partitioned, **kwargs
+        )
     probe = requests
     scale = 1.0
     if sample_fraction is not None:
@@ -528,9 +545,6 @@ def allocate(
         per_key.orderBy(F.col("_n").desc())
         .limit(1)
         .collect()
-    )
-    kwargs = dict(
-        key_col=key_cols, seq_cols=seq_cols, qty_col=qty_col, stock_col=stock_col
     )
     if not row:
         return allocate_sequential(

@@ -3,9 +3,10 @@
 Mirrors the DataProcessor surface (SURVEY §3.3): load dimensions →
 validate items → allocate inventory → derive orders / order_line_items /
 daily_summary / products_updated → forecast → write outputs. Every stage
-is a declarative DataFrame transformation; the ONLY Python in the data
-path is the ST1 allocation group function. The reference instead
-collect()s each day to the driver and loops rows
+is a declarative DataFrame transformation except two ``applyInPandas``
+group functions: the ST1 allocation (one group per product key) and the
+forecast fit (one group per metric, plans/forecast.py). The reference
+instead collect()s each day to the driver and loops rows
 (src/data_processor.py:389-465).
 
 Execution contract: everything is lazy; one write per output (SURVEY §7
@@ -30,10 +31,12 @@ Semantics flags:
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from etl_pipeline_candy_store_spark.functions.money import (
     format_money,
@@ -49,16 +52,17 @@ from etl_pipeline_candy_store_spark.sources.readers import (
     read_customers_csv,
     read_products_csv,
     read_transactions_json,
+    transactions_max_items,
 )
 from etl_pipeline_candy_store_spark.sources.writers import save_single_csv
 
 
 #: Row order of each single-file output. The public builders sort by
 #: these keys globally (``forecast_sales_profit`` sorts by date);
-#: :meth:`CandyPipeline.save_outputs` and ``orchestration.task_process``
-#: hand the same keys to ``save_single_csv``, which sorts inside the
-#: file's one partition, so Spark drops the global sort and its
-#: range-sampling job.
+#: :meth:`CandyPipeline.save_outputs` and :func:`save_csvs` (which the
+#: orchestration tasks write through) hand the same keys to
+#: ``save_single_csv``, which sorts inside the file's one partition, so
+#: Spark drops the global sort and its range-sampling job.
 OUTPUT_ORDER: dict[str, tuple[str, ...]] = {
     "orders": ("order_id",),
     "order_line_items": ("order_id", "product_id"),
@@ -66,6 +70,30 @@ OUTPUT_ORDER: dict[str, tuple[str, ...]] = {
     "products_updated": ("product_id",),
     "sales_profit_forecast": ("date",),
 }
+
+
+def save_csvs(frames: dict[str, DataFrame], output_dir: str) -> dict[str, str]:
+    """Write each frame as ``output_dir/<name>.csv`` with
+    ``save_single_csv``, sorted by its ``OUTPUT_ORDER`` keys, all writes
+    at once on one thread each. Every thread inherits the caller's local
+    properties, so its jobs stay in the caller's job group. Returns the
+    paths by name once every write has finished; if any write raised,
+    raises the first such error in ``frames`` order instead."""
+    spark = next(iter(frames.values())).sparkSession
+
+    def write(name: str) -> str:
+        return save_single_csv(
+            frames[name], output_dir, f"{name}.csv", OUTPUT_ORDER[name]
+        )
+
+    with ThreadPoolExecutor(max_workers=len(frames)) as pool:
+        # wrapped once per write: each wrap copies the local properties,
+        # and a running query sets its execution id in its own copy
+        futures = {
+            name: pool.submit(inheritable_thread_target(spark)(write), name)
+            for name in frames
+        }
+    return {name: f.result() for name, f in futures.items()}
 
 
 @dataclass
@@ -208,9 +236,14 @@ class CandyPipeline:
 
         The allocation's physical strategy is picked by
         ``config.allocation_strategy``: the default "auto" runs the
-        skew-aware dispatcher, whose probe is one map-side-combinable
-        aggregate over distinct keys — the only eager action on the
-        otherwise-lazy spine, and the price of not serializing a hot
+        skew-aware dispatcher. On the JSON path it first bounds the
+        request lines by the input's bytes
+        (:func:`~etl_pipeline_candy_store_spark.sources.readers.transactions_max_items`);
+        when the bound rules out a hot key, the spine stays fully lazy.
+        Otherwise (the bucketed table, an input that cannot be sized, or
+        one big enough) the dispatcher runs its probe, one
+        map-side-combinable aggregate over distinct keys — the only eager
+        action on the spine, and the price of not serializing a hot
         product key at 100 TB.
         """
         products = self.load_products().select(
@@ -230,9 +263,15 @@ class CandyPipeline:
             # product — hence of each of its dates — is in one partition.
             items = self.spark.table(self.config.transactions_bucketed_table)
             input_partitioned = True
+            max_rows = None
         else:
             items = self._request_items()
             input_partitioned = False
+            # from the configured paths, not load_transactions(): a
+            # subclass may load the same files as an already-cached frame
+            max_rows = transactions_max_items(
+                self.spark, self.config.transactions_paths
+            )
         requests = items.join(F.broadcast(products), "product_id", "inner")  # P4/J1
         key = (
             ["product_id", "business_date"]
@@ -250,6 +289,7 @@ class CandyPipeline:
             allocated = allocate(
                 requests,
                 input_partitioned=input_partitioned,
+                max_rows=max_rows,
                 **alloc_kwargs,
                 **self.config.allocation_options,
             )
@@ -406,8 +446,10 @@ class CandyPipeline:
     # -- orchestration -----------------------------------------------------
 
     def run(self) -> dict[str, DataFrame]:
-        """Build every output lazily; the only eager work is the
-        allocation dispatcher's skew probe (strategy "auto")."""
+        """Build every output lazily. The only eager work is the
+        allocation dispatcher's skew probe (strategy "auto"), and none
+        at all when the input's byte bound rules out a hot key (see
+        :meth:`allocated_lines`)."""
         lines = self.allocated_lines()
         orders = self.order_aggregates(lines)
         summary = self.daily_summary(orders)
@@ -423,27 +465,30 @@ class CandyPipeline:
         """S8 — write the five outputs as single CSV files, each sorted
         inside its one partition by its ``OUTPUT_ORDER`` keys, so no
         write runs a range-sampling job. The spine is cached so the four
-        derived tables don't recompute allocation. A pass over ten candy
-        days (perfbench ``candy_10day``, 4 cores) runs 21 Spark jobs: 3
-        for the allocation's skew probe, then per output one job per
-        shuffle stage AQE materializes plus the write (orders 5 with the
-        cache fill, line items 1, daily summary 3, products 3, forecast
-        6)."""
+        derived tables don't recompute allocation: ``order_line_items``
+        is written first and fills the cache, then the other four are
+        written concurrently (:func:`save_csvs`). Starting all five at
+        once would let each write's cache stage materialize the spine on
+        its own. A pass over ten candy days (perfbench ``candy_10day``,
+        4 cores) runs 18 Spark jobs when the byte bound skips the skew
+        probe: per output, one job per shuffle stage AQE materializes
+        plus the write (line items 4 with the cache fill, orders 2,
+        daily summary 3, products 3, forecast 6). A probe adds 3."""
         lines = self.allocated_lines().cache()
         try:
+            out = self.config.output_dir
+            paths = save_csvs(
+                {"order_line_items": self.order_line_items_output(lines)}, out
+            )
             orders = self.order_aggregates(lines)
             summary = self._daily_rollup(orders)
             frames = {
                 "orders": self.orders_output(orders),
-                "order_line_items": self.order_line_items_output(lines),
                 "daily_summary": summary,
                 "products_updated": self.products_updated(lines),
                 "sales_profit_forecast": self.forecast(summary),
             }
-            out = self.config.output_dir
-            return {
-                name: save_single_csv(df, out, f"{name}.csv", OUTPUT_ORDER[name])
-                for name, df in frames.items()
-            }
+            paths.update(save_csvs(frames, out))
+            return paths
         finally:
             lines.unpersist()

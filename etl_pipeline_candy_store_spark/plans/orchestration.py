@@ -23,11 +23,10 @@ from collections.abc import Callable
 from pyspark.sql import SparkSession
 
 from etl_pipeline_candy_store_spark.plans.candy_pipeline import (
-    OUTPUT_ORDER,
     CandyConfig,
     CandyPipeline,
+    save_csvs,
 )
-from etl_pipeline_candy_store_spark.sources.writers import save_single_csv
 
 
 @dataclass(frozen=True)
@@ -56,7 +55,8 @@ def task_load(spark: SparkSession, cfg: CandyConfig, ckpt: str) -> None:
 
 def task_process(spark: SparkSession, cfg: CandyConfig, ckpt: str) -> None:
     """Derive + persist the four output tables from the checkpoint (no
-    recomputation of allocation)."""
+    recomputation of allocation). The four CSV writes run concurrently:
+    nothing is cached, so no write waits on another's result."""
     pipe = CandyPipeline(spark, cfg)
     lines = spark.read.parquet(_ckpt(ckpt, "allocated_lines"))
     orders = pipe.order_aggregates(lines)
@@ -68,19 +68,13 @@ def task_process(spark: SparkSession, cfg: CandyConfig, ckpt: str) -> None:
         "daily_summary": summary,
         "products_updated": pipe.products_updated(lines),
     }
-    for name, df in frames.items():
-        save_single_csv(df, cfg.output_dir, f"{name}.csv", OUTPUT_ORDER[name])
+    save_csvs(frames, cfg.output_dir)
 
 
 def task_forecast(spark: SparkSession, cfg: CandyConfig, ckpt: str) -> None:
     pipe = CandyPipeline(spark, cfg)
     summary = spark.read.parquet(_ckpt(ckpt, "daily_summary"))
-    save_single_csv(
-        pipe.forecast(summary),
-        cfg.output_dir,
-        "sales_profit_forecast.csv",
-        OUTPUT_ORDER["sales_profit_forecast"],
-    )
+    save_csvs({"sales_profit_forecast": pipe.forecast(summary)}, cfg.output_dir)
 
 
 def task_cleanup(spark: SparkSession, cfg: CandyConfig, ckpt: str) -> None:

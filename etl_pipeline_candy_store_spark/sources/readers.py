@@ -60,6 +60,41 @@ def read_transactions_json(spark: SparkSession, paths: str | list[str]) -> DataF
     )
 
 
+#: Bytes of the shortest transaction item that survives validation,
+#: ``{"product_id":0,"qty":0}``: both fields must be set, and field
+#: names must be quoted (``allowUnquotedFieldNames`` is off by default).
+MIN_ITEM_BYTES = 24
+
+
+def transactions_max_items(spark: SparkSession, paths: str | list[str]) -> int | None:
+    """Upper bound on the number of transaction items with both fields
+    set in the JSON files :func:`read_transactions_json` reads from
+    ``paths``, known without a Spark job: the files' total byte length,
+    from Hadoop ``FileSystem`` metadata, over :data:`MIN_ITEM_BYTES`.
+
+    Paths may be files, directories or globs. Returns None when the
+    bound is unknown: a path matches nothing, or a file is compressed,
+    so its length says nothing about the text inside."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    codecs = jvm.org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
+    total = 0
+    for p in [paths] if isinstance(paths, str) else paths:
+        path = jvm.org.apache.hadoop.fs.Path(p)
+        fs = path.getFileSystem(conf)
+        statuses = fs.globStatus(path)
+        if not statuses:
+            return None
+        for status in statuses:
+            files = fs.listFiles(status.getPath(), True)
+            while files.hasNext():
+                f = files.next()
+                if codecs.getCodec(f.getPath()) is not None:
+                    return None
+                total += f.getLen()
+    return total // MIN_ITEM_BYTES
+
+
 def read_transactions_parquet(spark: SparkSession, path: str) -> DataFrame:
     """Scale-path variant: date-partitioned parquet with an explicit
     ``file_seq`` column written at ingest (at 100 TB the ingest job stamps

@@ -313,6 +313,49 @@ def test_auto_dispatch_picks_expected_strategy(spark, monkeypatch):
     assert calls[:4] == ["bkt", "seq", "seq", "bkt"], calls
 
 
+def test_auto_dispatch_row_bound_skips_probe(spark, monkeypatch):
+    """A caller's row bound below both thresholds rules out a hot key:
+    the dispatcher returns the sequential plan without probing. A bound
+    that reaches either threshold still probes."""
+    from etl_pipeline_candy_store_spark.operators import allocation as mod
+
+    calls = []
+    real_seq, real_bkt = mod.allocate_sequential, mod.allocate_bucketed
+    monkeypatch.setattr(
+        mod, "allocate_sequential",
+        lambda *a, **k: calls.append("seq") or real_seq(*a, **k),
+    )
+    monkeypatch.setattr(
+        mod, "allocate_bucketed",
+        lambda *a, **k: calls.append("bkt") or real_bkt(*a, **k),
+    )
+    rows = [{"key": 1, "seq": i, "qty": 1, "stock": 500} for i in range(200)]
+    df = spark.createDataFrame(rows, "key int, seq int, qty int, stock int")
+    kw = dict(key_col="key", seq_cols=["seq"], qty_col="qty", stock_col="stock")
+    sc = spark.sparkContext
+
+    def dispatch(group, **opts):
+        calls.clear()
+        sc.setJobGroup(group, group)
+        try:
+            out = mod.allocate(df, max_rows=200, **kw, **opts)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert out.count() == 200
+        return calls[0], n_jobs
+
+    assert dispatch("bound_below", hot_row_threshold=201) == ("seq", 0)
+    choice, n_jobs = dispatch("bound_at", hot_row_threshold=200)
+    assert (choice, n_jobs > 0) == ("bkt", True)
+    # the exhaust threshold counts too: a bound that reaches it probes
+    choice, n_jobs = dispatch(
+        "bound_at_exhaust", hot_row_threshold=10**6, exhaust_hot_row_threshold=200
+    )
+    assert (choice, n_jobs > 0) == ("seq", True)
+
+
 def test_auto_dispatch_sampled_probe(spark):
     """sample_fraction estimates the max share instead of counting it
     exactly; an undersized sample must fall back to the sequential path

@@ -5,6 +5,7 @@ stock exhaustion, comma-grouped money strings)."""
 from __future__ import annotations
 
 import csv
+import gzip
 import json
 import os
 
@@ -201,11 +202,26 @@ def test_save_outputs_single_files(pipeline):
         assert keys == sorted(keys), name
 
 
-#: Spark jobs one save_outputs() pass over the fixture runs: 3 for the
-#: allocation's skew probe, then one per AQE shuffle stage plus the write
-#: for each output. No write may run a range-sampling job: a global
-#: orderBy under each write adds one and its exchange stage (31 jobs).
-SAVE_OUTPUTS_MAX_JOBS = 21
+#: Spark jobs one save_outputs() pass over the fixture runs: one per AQE
+#: shuffle stage plus the write for each output. The input's byte bound
+#: skips the allocation's skew probe (3 jobs more, 21). No write may run
+#: a range-sampling job: a global orderBy under each write adds one and
+#: its exchange stage (31 jobs with the probe). Starting all five writes
+#: at once, rather than the line items first, lets each write's cache
+#: stage submit its own materialization job (22 jobs).
+SAVE_OUTPUTS_MAX_JOBS = 18
+
+
+def _jobs_in_group(sc, group, fn):
+    """Run ``fn`` under job group ``group``; return its result and the
+    ids of the jobs it submitted, once the status tracker has seen them."""
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return result, sorted(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_save_outputs_right_sized(spark, pipeline, monkeypatch):
@@ -232,18 +248,127 @@ def test_save_outputs_right_sized(spark, pipeline, monkeypatch):
         return path
 
     monkeypatch.setattr(candy_pipeline, "save_single_csv", save_and_look)
-    group = "test_save_outputs_right_sized"
-    sc.setJobGroup(group, group)
-    try:
-        pipeline.save_outputs()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert 0 < n_jobs <= SAVE_OUTPUTS_MAX_JOBS, n_jobs
+    _, jobs = _jobs_in_group(sc, "test_save_outputs_right_sized", pipeline.save_outputs)
+    assert 0 < len(jobs) <= SAVE_OUTPUTS_MAX_JOBS, jobs
     spine = [n for rdd, n in seen.items() if rdd not in before]
     shuffle_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert len(spine) == 1, seen
     assert spine[0] < shuffle_partitions
+
+
+def test_save_outputs_jobs_stay_in_callers_group(spark, pipeline):
+    """The concurrent writes run on their own threads, but every job the
+    pass submits belongs to the caller's job group."""
+    sc = spark.sparkContext
+
+    def marker(group):
+        return _jobs_in_group(sc, group, sc.parallelize([0], 1).count)[1][-1]
+
+    first = marker("test_jobs_stay_in_group.before")
+    _, jobs = _jobs_in_group(sc, "test_jobs_stay_in_group", pipeline.save_outputs)
+    last = marker("test_jobs_stay_in_group.after")
+    assert jobs and jobs == list(range(first + 1, last))
+
+
+def test_save_outputs_failed_write(spark, pipeline, monkeypatch):
+    """A write that raises: save_outputs() re-raises its error only after
+    the other writes have finished, and leaves no cached spine behind."""
+    from etl_pipeline_candy_store_spark.plans import candy_pipeline
+
+    jsc = spark.sparkContext._jsc.sc()
+
+    def cached_rdds():
+        return {i.id() for i in jsc.getRDDStorageInfo()}
+
+    class WriteFailed(RuntimeError):
+        pass
+
+    before = cached_rdds()
+    finished = []
+    real_save = candy_pipeline.save_single_csv
+
+    def save_or_fail(df, output_dir, filename, *args):
+        if filename == "products_updated.csv":
+            raise WriteFailed(filename)
+        path = real_save(df, output_dir, filename, *args)
+        finished.append(filename)
+        return path
+
+    monkeypatch.setattr(candy_pipeline, "save_single_csv", save_or_fail)
+    with pytest.raises(WriteFailed, match="products_updated.csv"):
+        pipeline.save_outputs()
+    assert sorted(finished) == [
+        "daily_summary.csv",
+        "order_line_items.csv",
+        "orders.csv",
+        "sales_profit_forecast.csv",
+    ]
+    assert cached_rdds() == before
+
+
+def test_transactions_bound_is_sound(spark, tmp_path):
+    """The byte bound on request lines holds on the densest input that
+    still validates: N shortest items, written with no whitespace."""
+    from etl_pipeline_candy_store_spark.sources.readers import (
+        MIN_ITEM_BYTES,
+        read_transactions_json,
+        transactions_max_items,
+    )
+
+    n = 500
+    item = '{"product_id":0,"qty":0}'
+    assert len(item) == MIN_ITEM_BYTES
+    text = (
+        '[{"transaction_id":1,"timestamp":"2024-03-01T09:00:00","items":['
+        + ",".join([item] * n)
+        + "]}]"
+    )
+    day_dir = tmp_path / "plain"
+    day_dir.mkdir()
+    day = day_dir / "transactions_20240301.json"
+    day.write_text(text)
+    items = (
+        read_transactions_json(spark, [str(day)])
+        .select(F.explode("items").alias("item"))
+        .filter(F.col("item.product_id").isNotNull())
+        .filter(F.col("item.qty").isNotNull())
+    )
+    assert items.count() == n
+    bound = transactions_max_items(spark, [str(day)])
+    assert n <= bound < n + len(text) // MIN_ITEM_BYTES
+    # a directory or a glob sizes the same files
+    assert transactions_max_items(spark, str(day_dir)) == bound
+    assert transactions_max_items(spark, [str(day_dir / "*.json")]) == bound
+
+    # a compressed file's length says nothing about its text: unknown
+    gz = tmp_path / "transactions_20240302.json.gz"
+    with gzip.open(gz, "wt") as f:
+        f.write(text)
+    assert read_transactions_json(spark, [str(gz)]).count() == 1
+    assert transactions_max_items(spark, [str(day), str(gz)]) is None
+    assert transactions_max_items(spark, [str(tmp_path / "missing.json")]) is None
+
+
+def test_allocated_lines_runs_no_eager_job(spark, pipeline, monkeypatch):
+    """With default thresholds the fixture's byte bound rules out a hot
+    key, so building the spine submits no job: the dispatcher returns
+    the sequential plan without its skew probe (3 jobs)."""
+    from etl_pipeline_candy_store_spark.operators import allocation as alloc_mod
+
+    calls = []
+    real_seq = alloc_mod.allocate_sequential
+    monkeypatch.setattr(
+        alloc_mod,
+        "allocate_sequential",
+        lambda *a, **k: calls.append("seq") or real_seq(*a, **k),
+    )
+    sc = spark.sparkContext
+    lines, jobs = _jobs_in_group(
+        sc, "test_allocated_lines_runs_no_eager_job", pipeline.allocated_lines
+    )
+    assert jobs == []
+    assert calls == ["seq"]
+    assert lines.count() > 0
 
 
 def test_packed_day_files_keep_sequence(spark, pipeline, fixture_dir):
