@@ -15,7 +15,10 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import operator
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from etl_pipeline_candy_store_spark.plans.catalog import load, register
@@ -25,6 +28,35 @@ _N_HASHES = 6
 _BANDS = 3  # rows-per-band = 2
 
 
+def fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    metrics: list[Column],
+    done: Callable[[tuple | None, tuple], bool],
+    max_iters: int,
+    what: str,
+) -> DataFrame:
+    """Iterate ``state = step(state)`` to a fixed point with one eager
+    action per round: ``metrics`` (named aggregates) are observed on the
+    round's own ``localCheckpoint(eager=True)``, and
+    ``done(previous, current)`` reads convergence from those values —
+    no second action per round. The initial ``state`` is round 0 (its
+    previous value is None); raises after ``max_iters`` further rounds.
+
+    Keep the observed frame's last operator in the checkpoint's result
+    stage (no exchange between them): Spark then applies each
+    partition's metric update once, even when a task is retried."""
+    prev = None
+    for _ in range(max_iters + 1):
+        obs = Observation()
+        state = state.observe(obs, *metrics).localCheckpoint(eager=True)
+        cur = tuple(obs.get.values())
+        if done(prev, cur):
+            return state
+        prev, state = cur, step(state)
+    raise RuntimeError(f"{what} did not converge in {max_iters} rounds")
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -32,54 +64,49 @@ def connected_components(
     max_iters: int = 50,
 ) -> DataFrame:
     """Connected components by iterative min-label propagation: every
-    node's label starts as itself; each round a node takes the min of
-    its own and its neighbors' labels; converges when nothing changes
-    (rounds = component diameter). Returns (node, label) where label is
-    the component's min node id.
+    node's label starts as the least of itself and its neighbors; each
+    round a node takes the min of its own and its neighbors' labels;
+    converges when no label drops (rounds = component diameter).
+    Returns (node, label) where label is the component's min node id.
 
-    Scale posture: each round is one shuffle join + one aggregate, with
-    an eager checkpoint so lineage stays flat; near-dup clusters have
-    tiny diameters (pairs come from a similarity threshold), so rounds
-    are few. For adversarial graphs (long chains) switch to the
-    large-star/small-star contraction (Kiveris et al., "Connected
-    Components in MapReduce"), which converges in O(log n) rounds —
-    same primitive ops, more rounds-per-pass bookkeeping.
+    Scale posture: each round is one shuffle join + one aggregate and
+    one eager checkpoint, the round's only action: the number of
+    dropped labels is observed on it (:func:`fixpoint`). Near-dup
+    clusters have tiny diameters (pairs come from a similarity
+    threshold), so rounds are few. For adversarial graphs (long chains)
+    use :func:`connected_components_star`, which converges in
+    O(log n) rounds.
     """
     sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     sym = sym.union(
         sym.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).localCheckpoint(eager=False)
-    labels = (
-        sym.select(F.col("a").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-        .localCheckpoint(eager=True)
+    # (node, label, prev): prev is the label the round started from
+    seed = sym.groupBy(F.col("a").alias("node")).agg(
+        F.least(F.col("node"), F.min("b")).alias("label"),
+        F.col("node").alias("prev"),
     )
-    for _ in range(max_iters):
-        nbr = (
-            sym.join(labels, sym["b"] == labels["node"])
-            .select(F.col("a").alias("node"), "label")
+
+    def _round(labels: DataFrame) -> DataFrame:
+        nbr = sym.join(labels, sym["b"] == labels["node"]).select(
+            F.col("a").alias("node"), "label", F.lit(None).alias("prev")
         )
-        new_labels = (
-            labels.unionByName(nbr)
+        return (
+            labels.select("node", "label", F.col("label").alias("prev"))
+            .unionByName(nbr)
             .groupBy("node")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=True)
+            .agg(F.min("label").alias("label"), F.max("prev").alias("prev"))
         )
-        changed = (
-            new_labels.withColumnRenamed("label", "new")
-            .join(labels, "node")
-            .filter(F.col("new") != F.col("label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            return labels
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iters} rounds — "
-        "component diameter exceeds max_iters; raise it or use "
-        "connected_components_star for chain-shaped graphs"
+
+    labels = fixpoint(
+        seed,
+        _round,
+        [F.sum((F.col("label") < F.col("prev")).cast("long")).alias("dropped")],
+        lambda _, cur: not cur[0],  # NULL: no nodes
+        max_iters,
+        "connected_components",
     )
+    return labels.select("node", "label")
 
 
 def connected_components_star(
@@ -102,34 +129,17 @@ def connected_components_star(
     - small-star: edges orient (larger → smaller); every node links its
       smaller neighbors (and itself) to the minimum.
 
-    Both strictly shrink the sum of tree heights; the fixed point is a
-    star forest. Returns (node, label) with label = the component's min
-    node id — same contract as :func:`connected_components`.
+    Both strictly shrink the sum of tree heights and keep every node;
+    the fixed point is a star forest. A self-loop (x, x) is kept only
+    while x is its neighborhood's minimum, so a node whose only edge is
+    a self-loop still labels itself. Each round's one action is the
+    new edge set's eager checkpoint, which observes its (count,
+    bit_xor of row hashes) — order-independent, and collision-safe
+    here because the edge set is distinct; the loop stops when a round
+    reproduces the previous value (:func:`fixpoint`). Returns (node,
+    label) with label = the component's min node id — same contract as
+    :func:`connected_components`.
     """
-    e = (
-        edges.select(
-            F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        e.select(F.col("u").alias("node"))
-        .union(e.select(F.col("v").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    def _checksum(df: DataFrame) -> tuple:
-        # bit_xor of row hashes: order-independent, overflow-free (a sum
-        # of xxhash64 values trips ANSI long-overflow), collision-safe
-        # here because the edge set is distinct
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
 
     def _large_star(cur: DataFrame) -> DataFrame:
         sym = cur.union(cur.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -140,9 +150,8 @@ def connected_components_star(
         )
         return (
             sym.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
+            .filter(F.col("v") >= F.col("u"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
             .distinct()
         )
 
@@ -151,29 +160,36 @@ def connected_components_star(
             F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
         )
         mins = oriented.groupBy("u").agg(F.min("v").alias("m"))
-        links = (
+        # both ends of each edge link to the min; a self-loop (x, x)
+        # with no smaller neighbor stays as the marker (x, x)
+        return (
             oriented.join(mins, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(mins.select("u", F.col("m").alias("v")))
+            .select(
+                F.explode(F.array("u", "v")).alias("x"),
+                "m",
+                (F.col("u") == F.col("v")).alias("loop"),
+            )
+            .filter((F.col("x") != F.col("m")) | F.col("loop"))
+            .select(F.col("x").alias("u"), F.col("m").alias("v"))
+            .distinct()
         )
-        return links.filter(F.col("u") != F.col("v")).distinct()
 
-    prev = _checksum(e)
-    for _ in range(max_iters):
-        e = _small_star(_large_star(e)).localCheckpoint(eager=True)
-        cur = _checksum(e)
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        raise RuntimeError(
-            f"star contraction did not converge in {max_iters} rounds"
-        )
-    # fixed point is a star forest: e = (node -> root); roots and isolated
-    # nodes label themselves
-    labels = e.select(F.col("u").alias("node"), F.col("v").alias("label"))
-    return nodes.join(labels, "node", "left").select(
-        "node", F.coalesce("label", "node").alias("label")
+    e = fixpoint(
+        edges.select(
+            F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
+        ).distinct(),
+        lambda cur: _small_star(_large_star(cur)),
+        # a sum of xxhash64 values would trip ANSI long overflow
+        [F.count(F.lit(1)).alias("n"), F.expr("bit_xor(xxhash64(u, v))").alias("h")],
+        operator.eq,  # the round reproduced the previous edge set
+        max_iters,
+        "star contraction",
+    )
+    # star forest: e = (node -> root); roots label themselves
+    return (
+        e.union(e.select("v", "v"))
+        .groupBy(F.col("u").alias("node"))
+        .agg(F.min("v").alias("label"))
     )
 
 
@@ -3187,40 +3203,29 @@ def exact_dup_spans(
         .join(dup_h, "h", "left_semi")
         .select("doc_id", "pos", "win")
     )
-    # occ cap and df band with NO (win)-clustered wide operator (r16):
-    # the r15 form computed dense_rank/max windows over one
-    # rebalance-by-win exchange, putting EVERY position of a hot window
-    # (df >> df_max boilerplate) into ONE task, sorted, with no partial
-    # aggregation in front — the straggler/OOM exposure the r15 verdict
-    # flagged (AQE cannot skew-split an exchange whose downstream
-    # windows require clustering by win). Same three survivor stats,
-    # re-staged so every wide operator's key includes doc_id or
-    # partial-aggregates map-side:
-    #   occd — the occ cap as a count window over (win, doc_id): the
-    #     key includes doc_id, so a hot window's positions spread
-    #     across tasks. This window's Exchange(win, doc_id) is the
-    #     branches' ONE shared exchange (ReuseExchange — the
-    #     jaccard_pairs pattern), so the explode pipeline behind wf
-    #     still runs once.
-    #   band — groupBy(win).count_distinct(doc_id) over the occ-capped
-    #     rows: planned as a (win, doc_id)-keyed dedup (no exchange —
-    #     already clustered) followed by a PARTIAL count per win
-    #     before the only win-keyed exchange, so a window present in
-    #     millions of docs reaches its reduce task as #map_tasks
-    #     partial rows, never millions. count_distinct(doc_id) after
-    #     the occ cap IS the window form's df (max of dense_rank).
-    #   inb — occd semi-joined to the banded wins, SALTED on
-    #     pmod(xxhash64(doc_id), S) with the (bounded, in-band) win
-    #     list exploded S ways: even the probe-side DISCARD of a hot
-    #     window's positions is spread over S tasks instead of
-    #     hash(win) landing them on one (guide §2.5 — deterministic
-    #     salt, so re-run tasks reproduce the assignment,
-    #     SPARK-38388). S is capped at 64: the band side is
-    #     replicated S-fold, and 64 slices already de-straggler a
-    #     one-task window, with AQE's skew-join split stacking on top.
-    # Row-for-row semantics are unchanged: positions whose
-    # (win, doc_id) count <= occ_max and whose window's occ-capped
-    # distinct-doc count is in [2, df_max].
+    # occ cap and df band with NO (win)-clustered window (r16): the r15
+    # form computed dense_rank/max windows over one rebalance-by-win
+    # exchange, putting EVERY position of a hot window (df >> df_max
+    # boilerplate) into ONE task, sorted, with no partial aggregation in
+    # front (AQE cannot skew-split an exchange whose downstream windows
+    # require clustering by win). The shipped stages:
+    #   occ_keys — the occ cap as a count per (win, doc_id): the key
+    #     includes doc_id, so a hot window's positions spread across
+    #     tasks.
+    #   band — a count per win over occ_keys (one row per (win,
+    #     doc_id), so the count IS the distinct-doc df after the occ
+    #     cap), partial-aggregated map-side before the only win-keyed
+    #     exchange: a window present in millions of docs reaches its
+    #     reduce task as #map_tasks partial rows, never millions.
+    #   survivors — wf left-semi joined to the banded wins on win: a
+    #     plain join that relies on AQE (a broadcast of the small band
+    #     side at runtime, or its skew-join split of a hot window's
+    #     probe rows); no salting.
+    #   inb — the occ cap re-applied to the survivors' positions as a
+    #     count window over (win, doc_id) (occ_keys only holds keys).
+    # Row-for-row semantics: positions whose (win, doc_id) count <=
+    # occ_max and whose window's occ-capped distinct-doc count is in
+    # [2, df_max].
     if checkpoint:
         wf = wf.localCheckpoint(eager=False)
     occ_keys = (

@@ -20,12 +20,15 @@ order dependence.
 
 from __future__ import annotations
 
+import operator
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_pipeline_candy_store_spark.operators.dedup import (
     _CLUSTERS_SQL,
     _JACCARD_PAIRS_SQL,
+    fixpoint,
     jaccard_pairs_checkpointed,
 )
 from etl_pipeline_candy_store_spark.plans.catalog import load, register
@@ -505,24 +508,22 @@ def kcore(
 def kcore_fixpoint(
     edges: DataFrame, k: int = _KCORE_K, max_rounds: int = 64
 ) -> DataFrame:
-    """Peel until no node is removed (the true k-core). Each round cuts
-    lineage with an eager localCheckpoint and the convergence check is
-    one O(1) count per round — at most ``max_rounds`` driver actions,
-    never row data on the driver. Raises if the graph hasn't converged
-    within ``max_rounds`` (every real graph converges in <= |V| rounds;
-    the near-dup graphs here take 1-3)."""
+    """Peel until no node is removed (the true k-core). Each round's one
+    action is its eager localCheckpoint, which observes the surviving
+    node count; the loop stops when a round keeps as many nodes as the
+    one before (:func:`~..dedup.fixpoint`) — never row data on the
+    driver. Raises if the graph hasn't converged within ``max_rounds``
+    (every real graph converges in <= |V| rounds; the near-dup graphs
+    here take 1-3)."""
     e = edges.localCheckpoint(eager=True)
-    cur = kcore_round(
-        e, e.select(F.col("src").alias("node")).distinct(), k
-    ).localCheckpoint(eager=True)
-    n = cur.count()
-    for _ in range(max_rounds):
-        nxt = kcore_round(e, cur.select("node"), k).localCheckpoint(eager=True)
-        m = nxt.count()
-        if m == n:
-            return nxt
-        cur, n = nxt, m
-    raise RuntimeError(f"k-core did not converge within {max_rounds} rounds")
+    return fixpoint(
+        kcore_round(e, e.select(F.col("src").alias("node")).distinct(), k),
+        lambda cur: kcore_round(e, cur.select("node"), k),
+        [F.count(F.lit(1)).alias("n")],
+        operator.eq,
+        max_rounds,
+        "k-core",
+    )
 
 
 def _kcore_round_sql(r: int, k: int) -> str:

@@ -61,6 +61,9 @@ from pyspark.sql import functions as F
 def _hadoop_fs(spark: SparkSession, path: str):
     jvm = spark.sparkContext._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
+    # resolve through hadoop Path, not java.net.URI: raw URI.create
+    # rejects legal filesystem characters (spaces — e.g. hive partition
+    # values like "pri=4-NOT SPECIFIED"), which Path escapes itself
     fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(conf)
     return jvm, fs
 

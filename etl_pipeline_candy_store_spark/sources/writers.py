@@ -311,10 +311,10 @@ def compact_parquet(
     """
     import math
 
+    from etl_pipeline_candy_store_spark.operators.ledger import _hadoop_fs
     from etl_pipeline_candy_store_spark.streaming.upsert_sink import (
         _fs_recover,
         _fs_swap,
-        _hadoop_fs,
     )
 
     target = path.rstrip("/")
@@ -380,10 +380,8 @@ def compact_partitioned_parquet(
     base partition first (completing the interrupted swap), and both
     suffixes are excluded from the listing so they are never compacted
     as bogus partition values."""
-    from etl_pipeline_candy_store_spark.streaming.upsert_sink import (
-        _fs_recover,
-        _hadoop_fs,
-    )
+    from etl_pipeline_candy_store_spark.operators.ledger import _hadoop_fs
+    from etl_pipeline_candy_store_spark.streaming.upsert_sink import _fs_recover
 
     jvm, fs = _hadoop_fs(spark, path)
     P = jvm.org.apache.hadoop.fs.Path

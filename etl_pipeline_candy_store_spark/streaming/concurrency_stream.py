@@ -23,11 +23,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_pipeline_candy_store_spark.operators.ledger import _hadoop_fs
 from etl_pipeline_candy_store_spark.operators.sweepline import interval_deltas
 from etl_pipeline_candy_store_spark.streaming.upsert_sink import (
     _fs_recover,
     _fs_swap,
-    _hadoop_fs,
 )
 
 _LEDGER = "_applied"

@@ -41,10 +41,10 @@ from etl_pipeline_candy_store_spark.operators.corpus_curation import (
     _GATE_FRAC_DEN,
     _GATE_FRAC_NUM,
 )
+from etl_pipeline_candy_store_spark.operators.ledger import _hadoop_fs
 from etl_pipeline_candy_store_spark.streaming.upsert_sink import (
     _fs_recover,
     _fs_swap,
-    _hadoop_fs,
 )
 
 _LEDGER = "_applied"

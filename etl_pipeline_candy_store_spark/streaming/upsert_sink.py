@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from etl_pipeline_candy_store_spark.operators.ledger import _hadoop_fs, fs_exists
 from etl_pipeline_candy_store_spark.operators.merge import merge_upsert
 
 
@@ -49,20 +50,9 @@ def read_ids_or_empty(spark, path: str, col: str = "doc_id") -> DataFrame:
     """Read an id relation that may not exist yet (no purges so far, or
     state written before the tombstone upgrade — absence means the empty
     set in both cases) as a frame of the right schema."""
-    jvm, fs = _hadoop_fs(spark, path)
-    if fs.exists(jvm.org.apache.hadoop.fs.Path(path)):
+    if fs_exists(spark, path):
         return spark.read.parquet(path)
     return spark.createDataFrame([], f"{col} long")
-
-
-def _hadoop_fs(spark, path: str):
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    # resolve through hadoop Path, not java.net.URI: raw URI.create
-    # rejects legal filesystem characters (spaces — e.g. hive partition
-    # values like "pri=4-NOT SPECIFIED"), which Path escapes itself
-    fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    return jvm, fs
 
 
 def _fs_swap(spark, tmp: str, target: str) -> None:

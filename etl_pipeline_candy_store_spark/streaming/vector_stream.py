@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
 
+from etl_pipeline_candy_store_spark.operators.ledger import fs_exists
 from etl_pipeline_candy_store_spark.operators.similarity import (
     _cos_micros,
     _dot,
@@ -49,10 +50,7 @@ _VECS_SCHEMA = "vec_id bigint, bucket int, embedding array<float>, nrm double"
 def _read_state(
     spark: SparkSession, path: str, schema: str, before_batch: int | None = None
 ) -> DataFrame:
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
+    if not fs_exists(spark, path):
         return spark.createDataFrame([], f"batch bigint, {schema}")
     df = spark.read.parquet(path)
     if before_batch is not None:

@@ -159,10 +159,8 @@ def test_purge_docs_physical_forget(spark, tmp_path):
     assert purge_docs(spark, target, victims) == 0  # idempotent
     # replay guard intact: the applied-batch ledger survived the swap
     from etl_pipeline_candy_store_spark.operators.ledger import (
-        read_max_applied,
-    )
-    from etl_pipeline_candy_store_spark.streaming.upsert_sink import (
         _hadoop_fs,
+        read_max_applied,
     )
 
     jvm, fs = _hadoop_fs(spark, target)

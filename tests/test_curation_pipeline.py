@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 
 pytestmark = pytest.mark.slow  # stream/state tier: quick runs skip (see conftest)
@@ -14,11 +17,21 @@ from etl_pipeline_candy_store_spark.plans.curation_pipeline import curate
 
 
 SF = "/root/testdata/sf0.001"
+BENCHMARK_JSON = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "BENCHMARK.json"
+)
 
 
 def test_curate_funnel_and_export(spark, tmp_path):
     out = str(tmp_path / "curated")
-    report = curate(spark, SF, out, n_shards=2)
+    stages: dict = {}
+    report = curate(spark, SF, out, n_shards=2, stage_seconds=stages)
+    # perfbench traces each recorded stage as a layer; an undeclared
+    # one is a KeyError in perfbench/run.py
+    with open(BENCHMARK_JSON) as fh:
+        declared = {m["name"] for m in json.load(fh)["per_layer"]}
+    assert stages
+    assert {f"plans.curation_pipeline.{s}.busy_s" for s in stages} <= declared
 
     f = report["funnel"]
     # the funnel only ever shrinks

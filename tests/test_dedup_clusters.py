@@ -6,15 +6,23 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from etl_pipeline_candy_store_spark.operators.dedup import connected_components
+from etl_pipeline_candy_store_spark.operators.dedup import (
+    connected_components,
+    connected_components_star,
+)
+
+CC_FUNCTIONS = [connected_components, connected_components_star]
+
+CHAIN = [(i, i + 1) for i in range(1, 10)]
+#: jobs one call launches on CHAIN, measured on a 4-core local session
+#: (before convergence was observed on each round's checkpoint, the two
+#: launched 103 and 60)
+CHAIN_MAX_JOBS = {connected_components: 48, connected_components_star: 44}
 
 
-def _cc(spark, edges):
+def _cc(spark, edges, fn=connected_components):
     df = spark.createDataFrame(edges, "src long, dst long")
-    return {
-        r["node"]: r["label"]
-        for r in connected_components(df, "src", "dst").collect()
-    }
+    return {r["node"]: r["label"] for r in fn(df, "src", "dst").collect()}
 
 
 def test_two_components(spark):
@@ -53,8 +61,9 @@ try:
     )
     @settings(max_examples=10, deadline=None)
     @pytest.mark.slow
-    def test_cc_matches_union_find(spark, edges):
-        got = _cc(spark, [(a, b) for a, b in edges])
+    @pytest.mark.parametrize("fn", CC_FUNCTIONS, ids=lambda f: f.__name__)
+    def test_cc_matches_union_find(spark, fn, edges):
+        got = _cc(spark, [(a, b) for a, b in edges], fn)
         # driver-side union-find oracle
         parent = {}
 
@@ -76,6 +85,40 @@ try:
         assert got == want
 except ImportError:  # pragma: no cover
     pass
+
+
+@pytest.mark.parametrize("fn", CC_FUNCTIONS, ids=lambda f: f.__name__)
+def test_chain_job_count(spark, fn):
+    """Each round is one eager action: convergence is observed on the
+    round's checkpoint, not read back by further jobs."""
+    sc = spark.sparkContext
+    df = spark.createDataFrame(CHAIN, "src long, dst long")
+    group = f"test_chain_job_count_{fn.__name__}"
+    sc.setJobGroup(group, group)
+    try:
+        labels = {r["node"]: r["label"] for r in fn(df).collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert labels == {i: 1 for i in range(1, 11)}
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= CHAIN_MAX_JOBS[fn]
+
+
+@pytest.mark.parametrize(
+    "fn, max_iters",
+    [(connected_components, 5), (connected_components_star, 1)],
+    ids=["connected_components", "connected_components_star"],
+)
+def test_raises_past_max_iters(spark, fn, max_iters):
+    df = spark.createDataFrame(CHAIN, "src long, dst long")
+    with pytest.raises(RuntimeError, match="did not converge in"):
+        fn(df, max_iters=max_iters)
+
+
+@pytest.mark.parametrize("fn", CC_FUNCTIONS, ids=lambda f: f.__name__)
+def test_empty_edges(spark, fn):
+    out = fn(spark.createDataFrame([], "src long, dst long"))
+    assert out.columns == ["node", "label"] and out.collect() == []
 
 
 def test_transitivity_of_cluster_query(spark):

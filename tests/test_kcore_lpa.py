@@ -9,6 +9,7 @@ from __future__ import annotations
 from collections import Counter, defaultdict
 
 import pyspark.sql.functions as F
+import pytest
 
 from etl_pipeline_candy_store_spark.operators.dedup import (
     jaccard_pairs_checkpointed,
@@ -88,6 +89,14 @@ def test_kcore_fixpoint_on_chain_where_one_round_is_not_enough(spark):
     assert one_round.count() > 3, "one round must NOT reach the fixpoint here"
     fx = {r["node"]: r["deg"] for r in kcore_fixpoint(_symmetrize(df), 2).collect()}
     assert fx == _py_kcore(pairs, 2) == {10: 2, 11: 2, 12: 2}
+    # the path peels over three rounds after the first: two are too few
+    with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
+        kcore_fixpoint(_symmetrize(df), 2, max_rounds=2)
+
+
+def test_kcore_fixpoint_empty_edges(spark):
+    out = kcore_fixpoint(spark.createDataFrame([], "src long, dst long"))
+    assert out.columns == ["node", "deg"] and out.collect() == []
 
 
 def test_lpa_matches_python(spark):
