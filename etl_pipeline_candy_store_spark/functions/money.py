@@ -20,11 +20,6 @@ def round_half_even(c: Column, scale: int = 2) -> Column:
     return F.bround(c, scale)
 
 
-def round_half_up(c: Column, scale: int = 2) -> Column:
-    """Parity with the reference's F.round usage (forecast values)."""
-    return F.round(c, scale)
-
-
 def format_money(c: Column, scale: int = 2) -> Column:
     """Display string with comma thousands separators — reference
     format_number(col, 2): 1234.5 → '1,234.50'. Output-only: never feed

@@ -1,6 +1,6 @@
 """The ONE ledger protocol behind every incremental/stateful store.
 
-Four families of state directories grew the same idea independently —
+Five families of state directories grew the same idea independently —
 "scope every write to its run/batch, commit visibility LAST, derive on
 read, repair on the next touch" — each re-earning the same
 crash-window lessons:
@@ -16,14 +16,23 @@ crash-window lessons:
 - the ER state retention pass (``streaming/entity_stream``): staged
   consolidation of committed batch partitions with an ``_UPTO`` marker
   committing the stage, delete+rename finish, repair-on-next-touch;
-- the non-idempotent rollup sink (``streaming/rollup_stream``): a
-  max-applied-batch ledger INSIDE the swapped target directory, so the
-  ledger and the data it guards commit in the same rename.
+- swapped targets (the CDC upsert sink, small-files compaction in
+  ``sources/writers``, and the twins below): a directory replaced
+  whole — write ``<target>._tmp-<tag>``, rename the current version
+  aside to ``<target>._old``, rename the new one in — with every
+  ``_``-prefixed side relation (ledger, seen set, tombstones) carried
+  into the new version by :func:`rewrite_target`;
+- the non-idempotent maintenance sinks (rollup, drift, concurrency,
+  forget, boilerplate, quality-gate, simhash, containment and winnow
+  twins): a max-applied-batch ledger INSIDE the swapped target
+  directory, so the ledger and the data it guards commit in the same
+  rename (:func:`commit_applied`).
 
-This module is the shared implementation. Each primitive preserves the
-exact on-disk layout its call sites already committed to (existing
-state dirs keep reading; oracle hashes unchanged) — the unification is
-of CODE, not format.
+This module is the shared implementation, and the only code that
+renames a Hadoop path. Each primitive preserves the exact on-disk
+layout its call sites already committed to (existing state dirs keep
+reading; oracle hashes unchanged) — the unification is of CODE, not
+format.
 
 Crash-window contract (tested in ``tests/test_ledger.py``):
 
@@ -43,12 +52,23 @@ Crash-window contract (tested in ``tests/test_ledger.py``):
    Spark never lists, commits with the ``_UPTO`` marker, and
    ``repair_staged_compaction`` completes (past the marker) or
    discards (before it) after a crash at ANY point.
+5. ``rewrite_target`` swaps a fully-written temp version in — a crash
+   before the first rename leaves the old version (the temp is
+   overwritten by the retry); a crash between the renames leaves only
+   ``<target>._old``, which ``target_exists`` (run first by every
+   rewrite and commit) renames back before anything merges; after the
+   second rename the new version, side relations included, is
+   complete.
+6. ``commit_applied`` stamps ``_applied`` inside the temp version, so
+   a batch is either wholly applied and recorded or neither; a replayed
+   ``batch_id <= max applied`` returns without touching the target.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -253,14 +273,123 @@ def staged_compact(
     return len(parts)
 
 
+# --- swapped targets (one directory replaced whole by two renames) -----
+
+_OLD = "._old"
+
+
+def _fs_swap(spark, tmp: str, target: str) -> None:
+    """Replace ``target`` with ``tmp`` via a two-rename protocol: the
+    current version is moved aside to ``<target>._old`` before ``tmp``
+    is renamed in, and ``._old`` is deleted only once the new version
+    is in place. Every rename's return value is checked; a failed
+    rename-in restores ``._old`` so readers never lose the target.
+
+    A crash between the two renames leaves ``._old`` but no ``target``;
+    ``_fs_recover`` (run at the head of every rewrite) completes that
+    swap by restoring ``._old``, and the interrupted batch replays from
+    the stream checkpoint. Plain delete+rename would instead lose the
+    whole target if the process died in the gap.
+    """
+    jvm, fs = _hadoop_fs(spark, target)
+    P = jvm.org.apache.hadoop.fs.Path
+    target_p, tmp_p, old_p = P(target), P(tmp), P(target + _OLD)
+    if fs.exists(old_p):
+        fs.delete(old_p, True)  # leftover from a completed prior swap
+    if fs.exists(target_p) and not fs.rename(target_p, old_p):
+        raise IOError(f"rename {target} -> {target}._old failed")
+    if not fs.rename(tmp_p, target_p):
+        if fs.exists(old_p):  # put the previous version back for readers
+            fs.rename(old_p, target_p)
+        raise IOError(f"rename {tmp} -> {target} failed")
+    fs.delete(old_p, True)
+
+
+def _fs_recover(spark, target: str) -> None:
+    """If a prior swap crashed between its two renames (``._old``
+    present, ``target`` absent), restore the previous version; the
+    batch that was being applied replays from the checkpoint."""
+    jvm, fs = _hadoop_fs(spark, target)
+    P = jvm.org.apache.hadoop.fs.Path
+    target_p, old_p = P(target), P(target + _OLD)
+    if not fs.exists(target_p) and fs.exists(old_p):
+        if not fs.rename(old_p, target_p):
+            raise IOError(f"recovery rename {target}._old -> {target} failed")
+
+
+def target_exists(spark: SparkSession, target: str) -> bool:
+    """Repair an interrupted swap of ``target``, then report whether a
+    version of it exists — the check every reader and merge of a
+    swapped target makes first."""
+    _fs_recover(spark, target.rstrip("/"))
+    return fs_exists(spark, target)
+
+
+def swap_children(spark: SparkSession, root: str) -> list[str]:
+    """Repair every interrupted swap directly under ``root`` and return
+    the names of its child directories, leaving out swap artifacts (a
+    crashed rewrite's temp version or a stale ``._old``)."""
+    jvm, fs = _hadoop_fs(spark, root)
+    P = jvm.org.apache.hadoop.fs.Path
+    root = root.rstrip("/")
+
+    def _dirs() -> list[str]:
+        return [
+            s.getPath().getName()
+            for s in fs.listStatus(P(root))
+            if s.isDirectory()
+        ]
+
+    for name in _dirs():
+        if name.endswith(_OLD):
+            _fs_recover(spark, f"{root}/{name[: -len(_OLD)]}")
+    return [
+        n
+        for n in _dirs()
+        if not n.endswith((_OLD, "._compact-tmp")) and "._tmp-" not in n
+    ]
+
+
+def rewrite_target(
+    spark: SparkSession,
+    target: str,
+    tag: int | str,
+    data: DataFrame,
+    sides: dict[str, DataFrame] | None = None,
+) -> None:
+    """Replace the directory ``target`` with a new version: repair an
+    interrupted swap, write ``data`` (and each ``sides`` relation under
+    its ``_``-prefixed name) into ``<target>._tmp-<tag>``, copy over
+    every ``_``-prefixed side directory of the current version that
+    ``sides`` does not replace, then swap. Side relations — ledgers,
+    seen sets, tombstones — are invisible to parquet readers of the
+    target, so only this carry keeps them across a rewrite."""
+    target = target.rstrip("/")
+    sides = sides or {}
+    _fs_recover(spark, target)
+    tmp = f"{target}._tmp-{tag}"
+    data.write.mode("overwrite").parquet(tmp)
+    for name, df in sides.items():
+        df.write.mode("overwrite").parquet(f"{tmp}/{name}")
+    jvm, fs = _hadoop_fs(spark, target)
+    P = jvm.org.apache.hadoop.fs.Path
+    if fs.exists(P(target)):
+        conf = spark.sparkContext._jsc.hadoopConfiguration()
+        for st in fs.listStatus(P(target)):
+            name = st.getPath().getName()
+            if st.isDirectory() and name.startswith("_") and name not in sides:
+                jvm.org.apache.hadoop.fs.FileUtil.copy(
+                    fs, st.getPath(), fs, P(f"{tmp}/{name}"), False, conf
+                )
+    _fs_swap(spark, tmp, target)
+
+
 # --- in-target max-applied ledger (the non-idempotent-sink protocol) ----
 
 LEDGER_NAME = "_applied"
 
 
-def read_max_applied(
-    spark: SparkSession, fs, jvm, target: str, ledger_name: str = LEDGER_NAME
-) -> int:
+def read_max_applied(spark: SparkSession, target: str) -> int:
     """The highest batch id whose merge committed into ``target``
     (-1 when the target or its ledger does not exist yet, or the ledger
     is empty from a crash between swap steps — recover, don't wedge).
@@ -269,24 +398,38 @@ def read_max_applied(
     same directory rename — only the max id is stored because batch ids
     are monotonic and only recent batches redeliver (a legacy multi-row
     ledger reads as the max of its rows)."""
-    P = jvm.org.apache.hadoop.fs.Path
-    if not fs.exists(P(target)) or not fs.exists(P(target + "/" + ledger_name)):
+    ledger = f"{target.rstrip('/')}/{LEDGER_NAME}"
+    if not fs_exists(spark, ledger):
         return -1
     return max(
-        (
-            r["batch_id"]
-            for r in spark.read.parquet(target + "/" + ledger_name).collect()
-        ),
+        (r["batch_id"] for r in spark.read.parquet(ledger).collect()),
         default=-1,
     )
 
 
-def write_applied_into(
-    spark: SparkSession, tmp: str, batch_id: int, ledger_name: str = LEDGER_NAME
-) -> None:
-    """Stamp the ledger INSIDE a not-yet-swapped target version, so the
-    data and the fact of its application become visible in the same
-    atomic rename."""
-    spark.createDataFrame([(int(batch_id),)], "batch_id long").coalesce(
-        1
-    ).write.mode("overwrite").parquet(tmp + "/" + ledger_name)
+def commit_applied(
+    spark: SparkSession,
+    target: str,
+    batch_id: int,
+    merge: Callable[
+        [DataFrame | None], DataFrame | tuple[DataFrame, dict[str, DataFrame]]
+    ],
+) -> bool:
+    """Apply micro-batch ``batch_id`` to ``target`` exactly once. After
+    repairing an interrupted swap, a ``batch_id`` at or below the
+    target's max-applied ledger is a replayed delivery and is skipped
+    (returns False, target untouched). Otherwise ``merge`` gets the
+    current version (None before the first commit) and returns the new
+    data — or ``(data, sides)`` when it also replaces side relations —
+    and :func:`rewrite_target` swaps it in with the ledger stamped
+    inside, so the data and the fact of its application commit in one
+    rename. Returns True."""
+    target = target.rstrip("/")
+    exists = target_exists(spark, target)
+    if batch_id <= read_max_applied(spark, target):
+        return False
+    out = merge(spark.read.parquet(target) if exists else None)
+    data, sides = out if isinstance(out, tuple) else (out, {})
+    stamp = spark.createDataFrame([(int(batch_id),)], "batch_id long").coalesce(1)
+    rewrite_target(spark, target, batch_id, data, {**sides, LEDGER_NAME: stamp})
+    return True

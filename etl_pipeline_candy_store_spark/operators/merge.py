@@ -5,6 +5,8 @@ with identical semantics).
 - ``merge_upsert``: target ⟕ updates by key → updated rows replace,
   new rows append, untouched rows pass through. One anti-join + union —
   a single shuffle on the key.
+- ``merge_sum``: add a batch's integer partial aggregates into a
+  maintained target (the count-merge of the streaming twins).
 - ``scd2_from_events``: collapse a change stream into type-2 dimension
   history (valid_from / valid_to / is_current) with one window pass.
 """
@@ -25,6 +27,19 @@ def merge_upsert(target: DataFrame, updates: DataFrame, keys: Sequence[str]) -> 
     keys = list(keys)
     untouched = target.join(updates.select(*keys), keys, "left_anti")
     return untouched.unionByName(updates)
+
+
+def merge_sum(
+    target: DataFrame | None, partials: DataFrame, keys: Sequence[str]
+) -> DataFrame:
+    """Additive merge: per key, ``target`` + ``partials`` summed in every
+    non-key column, each a long count (``partials`` alone when there is
+    no target yet). Integer addition, so the result is independent of
+    arrival order and batch split."""
+    if target is None:
+        return partials
+    sums = [F.sum(c).cast("long").alias(c) for c in partials.columns if c not in keys]
+    return target.unionByName(partials).groupBy(*keys).agg(*sums)
 
 
 def scd2_from_events(

@@ -61,14 +61,6 @@ def _cos_micros(dot: Column, norm_a: Column, norm_b: Column) -> Column:
     return F.floor(dot / (norm_a * norm_b) * F.lit(1000000.0)).cast("long")
 
 
-def _cos_micros_sql(a: str, b: str) -> str:
-    return (
-        f"CAST(floor({_DOT_SQL.format(a=a, b=b)} / "
-        f"({_NORM_SQL.format(a=a)} * {_NORM_SQL.format(a=b)}) "
-        f"* CAST(1000000 AS DOUBLE)) AS BIGINT)"
-    )
-
-
 def _cos_micros_prenorm_sql(a: str, b: str, na: str, nb: str) -> str:
     """Cosine micro-units with PRE-COMPUTED norm columns (hoisted into a
     WITH subquery by callers) — same arithmetic, evaluated once per

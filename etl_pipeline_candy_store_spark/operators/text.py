@@ -25,14 +25,6 @@ _LANG_MARKERS = {
 }
 
 
-def _n_tokens():
-    """Token count = spaces + 1, computed arithmetically so both engines
-    agree exactly (no regex dialect involved)."""
-    return (
-        F.length("text") - F.length(F.regexp_replace("text", " ", "")) + F.lit(1)
-    ).alias("n_tokens")
-
-
 @register(
     "q40_text_stats",
     oracle="""

@@ -95,14 +95,6 @@ def transactions_max_items(spark: SparkSession, paths: str | list[str]) -> int |
     return total // MIN_ITEM_BYTES
 
 
-def read_transactions_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Scale-path variant: date-partitioned parquet with an explicit
-    ``file_seq`` column written at ingest (at 100 TB the ingest job stamps
-    the sequence; partition pruning on business_date replaces the
-    reference's per-collection scans)."""
-    return spark.read.parquet(path)
-
-
 def read_jdbc(
     spark: SparkSession,
     url: str,

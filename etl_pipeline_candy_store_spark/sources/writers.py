@@ -304,21 +304,24 @@ def compact_parquet(
     exchange, the right default when input files are uniformly small.
     ``shuffle=True`` round-robins rows for evenly-sized outputs at the
     cost of one full exchange — for inputs with pathological size skew.
-    The swap reuses the CDC sink's two-rename protocol (write temp →
-    rename aside → rename in), so concurrent readers always see a
-    complete version and a crash between renames is repaired by the
-    next maintenance run (``_fs_recover``).
+    The swap is ``operators/ledger.rewrite_target``, the protocol every
+    maintained target shares (write temp → rename aside → rename in),
+    so concurrent readers always see a complete version, a crash
+    between renames is repaired by the next maintenance run
+    (``target_exists``), and the target's ``_``-prefixed side relations
+    (a twin's applied-batch ledger, seen set, tombstones) — invisible
+    to the parquet read that feeds the rewrite — are carried over.
     """
     import math
 
-    from etl_pipeline_candy_store_spark.operators.ledger import _hadoop_fs
-    from etl_pipeline_candy_store_spark.streaming.upsert_sink import (
-        _fs_recover,
-        _fs_swap,
+    from etl_pipeline_candy_store_spark.operators.ledger import (
+        _hadoop_fs,
+        rewrite_target,
+        target_exists,
     )
 
     target = path.rstrip("/")
-    _fs_recover(spark, target)
+    target_exists(spark, target)  # repair an interrupted swap first
     jvm, fs = _hadoop_fs(spark, target)
     P = jvm.org.apache.hadoop.fs.Path
     statuses = fs.listStatus(P(target))
@@ -338,11 +341,8 @@ def compact_parquet(
     # row count piggybacks on the rewrite via observe — no second scan
     obs = Observation()
     out = out.observe(obs, F.count(F.lit(1)).alias("rows"))
-    tmp = target + "._compact-tmp"
-    out.write.mode("overwrite").parquet(tmp)
-
+    rewrite_target(spark, target, "compact", out)
     rows = obs.get["rows"]
-    _fs_swap(spark, tmp, target)
     after = [
         s
         for s in fs.listStatus(P(target))
@@ -375,37 +375,16 @@ def compact_partitioned_parquet(
     (an already-compact partition rewrites to the same file count).
     Only leaf data directories are touched; ``_``-prefixed entries
     (markers, ledgers) are left alone. Swap artifacts from a crashed
-    prior run (``<part>._old`` / ``<part>._compact-tmp``) are NOT
-    partitions: ``._old`` leftovers trigger ``_fs_recover`` on their
-    base partition first (completing the interrupted swap), and both
-    suffixes are excluded from the listing so they are never compacted
-    as bogus partition values."""
-    from etl_pipeline_candy_store_spark.operators.ledger import _hadoop_fs
-    from etl_pipeline_candy_store_spark.streaming.upsert_sink import _fs_recover
+    prior run are NOT partitions: ``operators/ledger.swap_children``
+    completes each interrupted partition swap first and leaves the
+    artifacts out of the listing, so they are never compacted as bogus
+    partition values."""
+    from etl_pipeline_candy_store_spark.operators.ledger import swap_children
 
-    jvm, fs = _hadoop_fs(spark, path)
-    P = jvm.org.apache.hadoop.fs.Path
-    root = path.rstrip("/")
-    _SWAP_SUFFIXES = ("._old", "._compact-tmp")
-
-    def _dir_names() -> list[str]:
-        return [
-            s.getPath().getName()
-            for s in fs.listStatus(P(root))
-            if s.isDirectory()
-        ]
-
-    # repair first: a crash between _fs_swap's two renames leaves
-    # '<part>._old' with no '<part>' — restore it before compacting
-    for name in _dir_names():
-        if name.endswith("._old"):
-            _fs_recover(spark, root + "/" + name[: -len("._old")])
     parts = [
         name
-        for name in _dir_names()
-        if "=" in name
-        and not name.startswith(("_", "."))
-        and not name.endswith(_SWAP_SUFFIXES)
+        for name in swap_children(spark, path)
+        if "=" in name and not name.startswith(("_", "."))
     ]
     report: dict = {}
     total = {"files_before": 0, "files_after": 0, "rows": 0}

@@ -46,15 +46,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_candy_store_spark.operators.ledger import _hadoop_fs
+from etl_pipeline_candy_store_spark.operators.ledger import commit_applied
 from etl_pipeline_candy_store_spark.streaming.upsert_sink import (
     TOMBSTONES,
-    _fs_recover,
-    _fs_swap,
+    purge_ids,
     read_ids_or_empty,
 )
-
-_LEDGER = "_applied"
 
 
 def _batch_shingles(batch: DataFrame) -> DataFrame:
@@ -77,30 +74,21 @@ def stream_shingle_state(
     target parquet holds exactly the (doc_id, sh) relation a
     from-scratch scan of all first-seen rows would produce."""
 
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        from etl_pipeline_candy_store_spark.operators.ledger import (
-            read_max_applied,
-            write_applied_into,
-        )
+    target = target_path.rstrip("/")
 
+    def _apply(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        _fs_recover(spark, target_path)
-        jvm, fs = _hadoop_fs(spark, target_path)
-        P = jvm.org.apache.hadoop.fs.Path
-        target = target_path.rstrip("/")
-        applied_max = read_max_applied(spark, fs, jvm, target, _LEDGER)
-        tombs = None
-        if fs.exists(P(target)):
-            if batch_id <= applied_max:
-                return  # replayed delivery — already merged, skip
-            state = spark.read.parquet(target)
+
+        def merge(state: DataFrame | None) -> DataFrame:
+            if state is None:
+                return _batch_shingles(batch)
             # per-doc idempotence from the state itself: only doc_ids
             # no earlier batch contributed may append shingle rows.
             # Purged ids are excluded the same way — an at-least-once
             # redelivery of a forgotten document must not re-ingest it
             # (the purge removed its rows from the state, so the state
             # alone would treat it as first-seen; tombstones close that)
-            tombs = read_ids_or_empty(spark, target + "/" + TOMBSTONES)
+            tombs = read_ids_or_empty(spark, f"{target}/{TOMBSTONES}")
             new_docs = (
                 batch.select("doc_id")
                 .distinct()
@@ -109,17 +97,9 @@ def stream_shingle_state(
                 .localCheckpoint(eager=True)
             )
             fresh = batch.join(new_docs, "doc_id", "left_semi")
-            merged = state.unionByName(_batch_shingles(fresh))
-        else:
-            merged = _batch_shingles(batch)
-        tmp = target + f"._tmp-{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        if tombs is not None:
-            # tombstones survive every merge — the swap replaces the
-            # whole target directory, so the relation must be carried
-            tombs.write.mode("overwrite").parquet(tmp + "/" + TOMBSTONES)
-        write_applied_into(spark, tmp, batch_id, _LEDGER)
-        _fs_swap(spark, tmp, target)
+            return state.unionByName(_batch_shingles(fresh))
+
+        commit_applied(spark, target, batch_id, merge)
 
     return (
         doc_stream.writeStream.foreachBatch(_apply)
@@ -165,37 +145,16 @@ def purge_docs(
     forget_from_neardup_state obligation extended to the stream twin):
     physically rewrite the state WITHOUT the given doc_ids — shingle
     digests of a person's documents are still linkable derived state
-    and are purged, not filtered at read time. The rewrite rides the
-    same tmp+atomic-swap protocol as the sink, and the applied-batch
-    ledger is carried over so later micro-batches keep their replay
-    guard. Every requested id also lands in the ``_purged_docs``
-    tombstone set the sink's new-doc filter consults — without it, an
-    at-least-once redelivery of a purged doc_id would look first-seen
+    and are purged, not filtered at read time. The rewrite goes through
+    ``upsert_sink.purge_ids``, which carries the applied-batch ledger
+    over unchanged so later micro-batches keep their replay guard.
+    Every requested id also lands in the ``_purged_docs`` tombstone set
+    the sink's new-doc filter consults — without it, an at-least-once
+    redelivery of a purged doc_id would look first-seen
     (its rows are gone from the state, which doubles as the seen set)
     and the forgotten content would silently re-ingest (ADVICE r15).
     Returns the number of state rows removed. The state is
     doc_id-keyed, so the purge needs only ids — unlike the winnow
     twin, whose aggregated df counts need the purged docs' text to
     subtract (see ``winnow_stream.purge_docs``)."""
-    from etl_pipeline_candy_store_spark.operators.ledger import (
-        read_max_applied,
-        write_applied_into,
-    )
-
-    _fs_recover(spark, target_path)
-    jvm, fs = _hadoop_fs(spark, target_path)
-    target = target_path.rstrip("/")
-    applied_max = read_max_applied(spark, fs, jvm, target, _LEDGER)
-    state = spark.read.parquet(target)
-    ids = doc_ids.select("doc_id").distinct()
-    keep = state.join(ids, "doc_id", "left_anti")
-    removed = state.count() - keep.count()
-    tombs = read_ids_or_empty(spark, target + "/" + TOMBSTONES).unionByName(
-        ids
-    ).distinct()
-    tmp = target + "._tmp-purge"
-    keep.write.mode("overwrite").parquet(tmp)
-    tombs.write.mode("overwrite").parquet(tmp + "/" + TOMBSTONES)
-    write_applied_into(spark, tmp, applied_max, _LEDGER)
-    _fs_swap(spark, tmp, target)
-    return removed
+    return purge_ids(spark, target_path, doc_ids)

@@ -33,13 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_candy_store_spark.operators.ledger import _hadoop_fs
-from etl_pipeline_candy_store_spark.streaming.upsert_sink import (
-    _fs_recover,
-    _fs_swap,
-)
-
-_LEDGER = "_applied"
+from etl_pipeline_candy_store_spark.operators.ledger import commit_applied
+from etl_pipeline_candy_store_spark.operators.merge import merge_sum
 
 
 def _batch_counts(batch: DataFrame) -> DataFrame:
@@ -63,32 +58,13 @@ def stream_token_counts(
     arrival order or batch split."""
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
-        from etl_pipeline_candy_store_spark.operators.ledger import (
-            read_max_applied,
-            write_applied_into,
+        counts = _batch_counts(batch)
+        commit_applied(
+            batch.sparkSession,
+            target_path,
+            batch_id,
+            lambda cur: merge_sum(cur, counts, ["source", "tok"]),
         )
-
-        spark = batch.sparkSession
-        _fs_recover(spark, target_path)
-        jvm, fs = _hadoop_fs(spark, target_path)
-        P = jvm.org.apache.hadoop.fs.Path
-        target = target_path.rstrip("/")
-        applied_max = read_max_applied(spark, fs, jvm, target, _LEDGER)
-        if fs.exists(P(target)):
-            if batch_id <= applied_max:
-                return  # replayed delivery — already merged, skip
-            merged = (
-                spark.read.parquet(target)
-                .unionByName(_batch_counts(batch))
-                .groupBy("source", "tok")
-                .agg(F.sum("c").cast("long").alias("c"))
-            )
-        else:
-            merged = _batch_counts(batch)
-        tmp = target + f"._tmp-{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        write_applied_into(spark, tmp, batch_id, _LEDGER)
-        _fs_swap(spark, tmp, target)
 
     return (
         doc_stream.writeStream.foreachBatch(_apply)

@@ -21,10 +21,12 @@ the same tombstone table gates RE-ARRIVING copies of forgotten content
 at ingest (:func:`forgotten_filter` on the crawl stream), which a
 row-id list also cannot do.
 
-Exactly-once: the same write-temp-then-atomic-swap + applied-batch
-ledger protocol as the other maintenance sinks (rollup_stream,
-concurrency_stream) — a replayed micro-batch is detected in the ledger
-and skipped, and a crash mid-swap is repaired by ``_fs_recover``.
+Exactly-once: the shared applied-batch ledger commit
+(``operators/ledger.commit_applied``) of the other maintenance sinks
+(rollup_stream, concurrency_stream) — a replayed micro-batch is
+detected in the ledger and skipped, and a crash mid-swap is repaired
+by ``target_exists``, which every commit and :func:`read_tombstones`
+run first.
 """
 
 from __future__ import annotations
@@ -32,13 +34,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_candy_store_spark.operators.ledger import _hadoop_fs
-from etl_pipeline_candy_store_spark.streaming.upsert_sink import (
-    _fs_recover,
-    _fs_swap,
+from etl_pipeline_candy_store_spark.operators.ledger import (
+    commit_applied,
+    target_exists,
 )
-
-_LEDGER = "_applied"
 
 
 def request_digests(requests: DataFrame, text_col: str = "text") -> DataFrame:
@@ -57,44 +56,15 @@ def apply_forget_batch(
     """Merge one micro-batch of forget requests into the tombstone
     table at ``state_path`` (exactly-once under replay). Work is
     bounded by |tombstones| + |batch| — the corpus is never touched."""
-    spark = requests.sparkSession
-    _fs_recover(spark, state_path)
-    jvm, fs = _hadoop_fs(spark, state_path)
-    P = jvm.org.apache.hadoop.fs.Path
-    target = state_path.rstrip("/")
     batch_digests = request_digests(requests).distinct()
-    # the ledger stores only the MAX applied batch_id: Structured
-    # Streaming batch ids are monotonic and only recent uncommitted
-    # batches redeliver, so `batch_id <= max` IS the replay test — a
-    # full id history would make per-batch ledger I/O grow with stream
-    # age on exactly the long-running streams this sink exists for
-    # (reads of a legacy multi-row ledger still work: max of its rows)
-    applied_max = -1
-    if fs.exists(P(target)):
-        if fs.exists(P(target + "/" + _LEDGER)):
-            # default=-1: a zero-row ledger (crash between swap steps)
-            # means "nothing applied" — must recover, not wedge the stream
-            applied_max = max(
-                (
-                    r["batch_id"]
-                    for r in spark.read.parquet(target + "/" + _LEDGER).collect()
-                ),
-                default=-1,
-            )
-        if batch_id <= applied_max:
-            return  # replayed delivery — already merged, skip
-        merged = (
-            spark.read.parquet(target)
-            .unionByName(batch_digests)
-            .distinct()
-        )
-    else:
-        merged = batch_digests
-    tmp = target + f"._tmp-{batch_id}"
-    merged.write.mode("overwrite").parquet(tmp)
-    ledger = spark.createDataFrame([(int(batch_id),)], "batch_id long")
-    ledger.coalesce(1).write.mode("overwrite").parquet(tmp + "/" + _LEDGER)
-    _fs_swap(spark, tmp, target)
+    commit_applied(
+        requests.sparkSession,
+        state_path,
+        batch_id,
+        lambda cur: batch_digests
+        if cur is None
+        else cur.unionByName(batch_digests).distinct(),
+    )
 
 
 def stream_forget(request_stream: DataFrame, state_path: str):
@@ -114,10 +84,7 @@ def stream_forget(request_stream: DataFrame, state_path: str):
 def read_tombstones(spark: SparkSession, state_path: str) -> DataFrame:
     """The maintained tombstone digest table (empty frame if no
     requests have been applied yet)."""
-    jvm, fs = _hadoop_fs(spark, state_path)
-    P = jvm.org.apache.hadoop.fs.Path
-    _fs_recover(spark, state_path)
-    if not fs.exists(P(state_path.rstrip("/"))):
+    if not target_exists(spark, state_path):
         return spark.createDataFrame([], "digest string")
     return spark.read.parquet(state_path.rstrip("/")).select("digest")
 

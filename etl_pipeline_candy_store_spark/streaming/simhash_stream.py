@@ -40,15 +40,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_candy_store_spark.operators.ledger import _hadoop_fs
+from etl_pipeline_candy_store_spark.operators.ledger import commit_applied
 from etl_pipeline_candy_store_spark.streaming.upsert_sink import (
     TOMBSTONES,
-    _fs_recover,
-    _fs_swap,
+    purge_ids,
     read_ids_or_empty,
 )
-
-_LEDGER = "_applied"
 
 
 def _batch_signatures(batch: DataFrame) -> DataFrame:
@@ -66,47 +63,28 @@ def stream_simhash_signatures(
     holds exactly the (doc_id, simhash) relation a from-scratch scan of
     all rows seen so far would produce."""
 
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        from etl_pipeline_candy_store_spark.operators.ledger import (
-            read_max_applied,
-            write_applied_into,
-        )
+    target = target_path.rstrip("/")
 
+    def _apply(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        _fs_recover(spark, target_path)
-        jvm, fs = _hadoop_fs(spark, target_path)
-        P = jvm.org.apache.hadoop.fs.Path
-        target = target_path.rstrip("/")
-        applied_max = read_max_applied(spark, fs, jvm, target, _LEDGER)
-        tombs = None
-        if fs.exists(P(target)):
-            if batch_id <= applied_max:
-                return  # replayed delivery — already merged, skip
+
+        def merge(current: DataFrame | None) -> DataFrame:
+            if current is None:
+                return _batch_signatures(batch)
             # the min-merge makes redelivery idempotent for LIVE docs,
             # but a PURGED doc's row is gone — without the tombstone
             # filter a redelivery would re-insert the forgotten
             # signature, undoing the purge
-            tombs = read_ids_or_empty(spark, target + "/" + TOMBSTONES)
-            merged = (
-                spark.read.parquet(target)
-                .unionByName(
-                    _batch_signatures(
-                        batch.join(tombs, "doc_id", "left_anti")
-                    )
+            tombs = read_ids_or_empty(spark, f"{target}/{TOMBSTONES}")
+            return (
+                current.unionByName(
+                    _batch_signatures(batch.join(tombs, "doc_id", "left_anti"))
                 )
                 .groupBy("doc_id")
                 .agg(F.min("simhash").cast("long").alias("simhash"))
             )
-        else:
-            merged = _batch_signatures(batch)
-        tmp = target + f"._tmp-{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        if tombs is not None:
-            # tombstones survive every merge — the swap replaces the
-            # whole target directory, so the relation must be carried
-            tombs.write.mode("overwrite").parquet(tmp + "/" + TOMBSTONES)
-        write_applied_into(spark, tmp, batch_id, _LEDGER)
-        _fs_swap(spark, tmp, target)
+
+        commit_applied(spark, target, batch_id, merge)
 
     return (
         doc_stream.writeStream.foreachBatch(_apply)
@@ -134,31 +112,10 @@ def purge_docs(
     """Right-to-be-forgotten for the signature state: physically
     rewrite without the given doc_ids (a SimHash signature is derived
     from a document's content — linkable state, purged not filtered),
-    via the sink's own tmp+atomic-swap protocol with the applied-batch
-    ledger carried over. Every requested id also lands in the
+    via ``upsert_sink.purge_ids``, which carries the applied-batch
+    ledger over unchanged. Every requested id also lands in the
     ``_purged_docs`` tombstone set the sink consults — otherwise an
     at-least-once redelivery of a purged doc_id would re-insert its
     signature through the min-merge (ADVICE r15). Returns rows
     removed."""
-    from etl_pipeline_candy_store_spark.operators.ledger import (
-        read_max_applied,
-        write_applied_into,
-    )
-
-    _fs_recover(spark, target_path)
-    jvm, fs = _hadoop_fs(spark, target_path)
-    target = target_path.rstrip("/")
-    applied_max = read_max_applied(spark, fs, jvm, target, _LEDGER)
-    state = spark.read.parquet(target)
-    ids = doc_ids.select("doc_id").distinct()
-    keep = state.join(ids, "doc_id", "left_anti")
-    removed = state.count() - keep.count()
-    tombs = read_ids_or_empty(spark, target + "/" + TOMBSTONES).unionByName(
-        ids
-    ).distinct()
-    tmp = target + "._tmp-purge"
-    keep.write.mode("overwrite").parquet(tmp)
-    tombs.write.mode("overwrite").parquet(tmp + "/" + TOMBSTONES)
-    write_applied_into(spark, tmp, applied_max, _LEDGER)
-    _fs_swap(spark, tmp, target)
-    return removed
+    return purge_ids(spark, target_path, doc_ids)

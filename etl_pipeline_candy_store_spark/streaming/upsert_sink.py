@@ -6,8 +6,13 @@ Shape: per micro-batch, (1) collapse the batch to its LAST update per
 key (deterministic: max ``seq_col``, ties impossible when seq is a
 true version column), (2) ``merge_upsert`` against the current target
 (one left-anti shuffle on the keys + union), (3) rewrite the target via
-write-temp-then-rename using the Hadoop FileSystem API, so the swap is
-a metadata operation on HDFS-like stores rather than a copy.
+``operators/ledger.rewrite_target`` (write temp, then the two-rename
+swap through the Hadoop FileSystem API), so the swap is a metadata
+operation on HDFS-like stores rather than a copy, and a crash between
+the renames is repaired by ``target_exists`` at the next batch.
+
+The sink keeps no applied-batch ledger: an upsert is idempotent, and a
+fresh checkpoint restarting at batch 0 must still apply.
 
 Exactly-once posture: Structured Streaming's checkpoint gives
 at-least-once delivery of each micro-batch to ``foreachBatch``; the
@@ -28,7 +33,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from etl_pipeline_candy_store_spark.operators.ledger import _hadoop_fs, fs_exists
+from etl_pipeline_candy_store_spark.operators.ledger import (
+    fs_exists,
+    rewrite_target,
+    target_exists,
+)
 from etl_pipeline_candy_store_spark.operators.merge import merge_upsert
 
 
@@ -55,43 +64,22 @@ def read_ids_or_empty(spark, path: str, col: str = "doc_id") -> DataFrame:
     return spark.createDataFrame([], f"{col} long")
 
 
-def _fs_swap(spark, tmp: str, target: str) -> None:
-    """Replace ``target`` with ``tmp`` via a two-rename protocol: the
-    current version is moved aside to ``<target>._old`` before ``tmp``
-    is renamed in, and ``._old`` is deleted only once the new version
-    is in place. Every rename's return value is checked; a failed
-    rename-in restores ``._old`` so readers never lose the target.
-
-    A crash between the two renames leaves ``._old`` but no ``target``;
-    ``_fs_recover`` (run at the head of every batch apply) completes
-    that swap by restoring ``._old``, and the interrupted batch replays
-    from the stream checkpoint. Plain delete+rename would instead lose
-    the whole target if the process died in the gap.
-    """
-    jvm, fs = _hadoop_fs(spark, target)
-    P = jvm.org.apache.hadoop.fs.Path
-    target_p, tmp_p, old_p = P(target), P(tmp), P(target + "._old")
-    if fs.exists(old_p):
-        fs.delete(old_p, True)  # leftover from a completed prior swap
-    if fs.exists(target_p) and not fs.rename(target_p, old_p):
-        raise IOError(f"rename {target} -> {target}._old failed")
-    if not fs.rename(tmp_p, target_p):
-        if fs.exists(old_p):  # put the previous version back for readers
-            fs.rename(old_p, target_p)
-        raise IOError(f"rename {tmp} -> {target} failed")
-    fs.delete(old_p, True)
-
-
-def _fs_recover(spark, target: str) -> None:
-    """If a prior swap crashed between its two renames (``._old``
-    present, ``target`` absent), restore the previous version; the
-    batch that was being applied replays from the checkpoint."""
-    jvm, fs = _hadoop_fs(spark, target)
-    P = jvm.org.apache.hadoop.fs.Path
-    target_p, old_p = P(target), P(target + "._old")
-    if not fs.exists(target_p) and fs.exists(old_p):
-        if not fs.rename(old_p, target_p):
-            raise IOError(f"recovery rename {target}._old -> {target} failed")
+def purge_ids(spark, target_path: str, doc_ids: DataFrame) -> int:
+    """Physically rewrite a doc_id-keyed twin state without ``doc_ids``
+    and add every requested id to its tombstone set, through
+    ``operators/ledger.rewrite_target`` (which carries the applied-batch
+    ledger over unchanged). Returns the number of state rows removed."""
+    target = target_path.rstrip("/")
+    target_exists(spark, target)  # repair an interrupted swap first
+    state = spark.read.parquet(target)
+    ids = doc_ids.select("doc_id").distinct()
+    keep = state.join(ids, "doc_id", "left_anti")
+    removed = state.count() - keep.count()
+    tombs = read_ids_or_empty(spark, f"{target}/{TOMBSTONES}").unionByName(
+        ids
+    ).distinct()
+    rewrite_target(spark, target, "purge", keep, {TOMBSTONES: tombs})
+    return removed
 
 
 def _last_per_key(batch: DataFrame, keys: Sequence[str], seq_col: str) -> DataFrame:
@@ -120,9 +108,7 @@ def stream_upsert_sink(
     def _apply(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         updates = _last_per_key(batch, keys, seq_col)
-        _fs_recover(spark, target_path)
-        jvm, fs = _hadoop_fs(spark, target_path)
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(target_path)):
+        if target_exists(spark, target_path):
             target = spark.read.parquet(target_path)
             # cross-batch "latest wins" needs the target's own seq too:
             # an out-of-order replayed batch must not clobber newer rows
@@ -133,9 +119,7 @@ def stream_upsert_sink(
             merged = merge_upsert(target, effective, keys)
         else:
             merged = updates
-        tmp = target_path.rstrip("/") + f"._tmp-{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        _fs_swap(spark, tmp, target_path)
+        rewrite_target(spark, target_path, batch_id, merged)
 
     return (
         update_stream.writeStream.foreachBatch(_apply)

@@ -55,21 +55,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_candy_store_spark.operators.ledger import _hadoop_fs
+from etl_pipeline_candy_store_spark.operators.ledger import (
+    commit_applied,
+    fs_exists,
+    rewrite_target,
+    target_exists,
+)
+from etl_pipeline_candy_store_spark.operators.merge import merge_sum
 from etl_pipeline_candy_store_spark.streaming.upsert_sink import (
     TOMBSTONES,
-    _fs_recover,
-    _fs_swap,
     read_ids_or_empty,
 )
 
-_LEDGER = "_applied"
 #: seen-doc set subdir — underscore-prefixed so parquet readers of the
 #: count state never see it; swaps atomically with the counts
 _SEEN = "_seen_docs"
 
 
-def _require_seen(fs, P, target: str) -> None:
+def _require_seen(spark: SparkSession, target: str) -> None:
     """Refuse to merge into (or purge) state written by the pre-r14
     sink: such state has no ``_seen_docs`` relation, and the aggregated
     df counts cannot be retroactively attributed to doc_ids, so there
@@ -77,7 +80,7 @@ def _require_seen(fs, P, target: str) -> None:
     guarantee — resuming would either crash on the missing path
     (the r14 behavior this guard replaces, ADVICE r15) or silently
     re-open the double-count hole the seen set exists to close."""
-    if not fs.exists(P(target + "/" + _SEEN)):
+    if not fs_exists(spark, f"{target}/{_SEEN}"):
         raise RuntimeError(
             f"winnow fingerprint state at {target} predates the "
             "_seen_docs per-doc idempotence set (r14 state format "
@@ -108,35 +111,29 @@ def stream_fingerprint_counts(
     frequencies a from-scratch scan of all rows seen so far would
     produce."""
 
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        from etl_pipeline_candy_store_spark.operators.ledger import (
-            read_max_applied,
-            write_applied_into,
-        )
+    target = target_path.rstrip("/")
 
+    def _apply(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        _fs_recover(spark, target_path)
-        jvm, fs = _hadoop_fs(spark, target_path)
-        P = jvm.org.apache.hadoop.fs.Path
-        target = target_path.rstrip("/")
-        applied_max = read_max_applied(spark, fs, jvm, target, _LEDGER)
-        tombs = None
-        if fs.exists(P(target)):
-            # format check FIRST, even for replayed batches: resuming
-            # onto pre-r14 state must fail fast with the migration
-            # story, not silently skip until the first fresh batch
-            _require_seen(fs, P, target)
-            if batch_id <= applied_max:
-                return  # replayed delivery — already merged, skip
+        # format check FIRST, even for replayed batches: resuming onto
+        # pre-r14 state must fail fast with the migration story, not
+        # silently skip until the first fresh batch
+        if target_exists(spark, target):
+            _require_seen(spark, target)
+
+        def merge(counts: DataFrame | None):
+            if counts is None:
+                docs = batch.select("doc_id").distinct()
+                return _batch_fpcounts(batch), {_SEEN: docs}
             # per-doc idempotence: only doc_ids no earlier batch has
             # contributed may add fingerprint partials — an at-least-
             # once redelivery in a NEW batch_id (not a whole-batch
-            # replay, which the ledger guard above already skipped)
-            # must not double-count its fingerprints' df. Purged ids
-            # are excluded the same way: a redelivery of a forgotten
-            # document must not silently re-ingest it (tombstones).
-            seen = spark.read.parquet(target + "/" + _SEEN)
-            tombs = read_ids_or_empty(spark, target + "/" + TOMBSTONES)
+            # replay, which the ledger skips) must not double-count its
+            # fingerprints' df. Purged ids are excluded the same way: a
+            # redelivery of a forgotten document must not silently
+            # re-ingest it (tombstones).
+            seen = spark.read.parquet(f"{target}/{_SEEN}")
+            tombs = read_ids_or_empty(spark, f"{target}/{TOMBSTONES}")
             new_docs = (
                 batch.select("doc_id")
                 .distinct()
@@ -145,25 +142,10 @@ def stream_fingerprint_counts(
                 .localCheckpoint(eager=True)
             )
             fresh = batch.join(new_docs, "doc_id", "left_semi")
-            merged = (
-                spark.read.parquet(target)
-                .unionByName(_batch_fpcounts(fresh))
-                .groupBy("wmin")
-                .agg(F.sum("df").cast("long").alias("df"))
-            )
-            merged_docs = seen.unionByName(new_docs)
-        else:
-            merged = _batch_fpcounts(batch)
-            merged_docs = batch.select("doc_id").distinct()
-        tmp = target + f"._tmp-{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        merged_docs.write.mode("overwrite").parquet(tmp + "/" + _SEEN)
-        if tombs is not None:
-            # tombstones survive every merge — the swap replaces the
-            # whole target directory, so the relation must be carried
-            tombs.write.mode("overwrite").parquet(tmp + "/" + TOMBSTONES)
-        write_applied_into(spark, tmp, batch_id, _LEDGER)
-        _fs_swap(spark, tmp, target)
+            merged = merge_sum(counts, _batch_fpcounts(fresh), ["wmin"])
+            return merged, {_SEEN: seen.unionByName(new_docs)}
+
+        commit_applied(spark, target, batch_id, merge)
 
     return (
         doc_stream.writeStream.foreachBatch(_apply)
@@ -251,17 +233,9 @@ def purge_docs(
     doc_ids removed from the seen set. After the purge, the count
     state equals what a from-scratch stream over the remaining corpus
     would have produced — tested."""
-    from etl_pipeline_candy_store_spark.operators.ledger import (
-        read_max_applied,
-        write_applied_into,
-    )
-
-    _fs_recover(spark, target_path)
-    jvm, fs = _hadoop_fs(spark, target_path)
-    P = jvm.org.apache.hadoop.fs.Path
     target = target_path.rstrip("/")
-    _require_seen(fs, P, target)
-    applied_max = read_max_applied(spark, fs, jvm, target, _LEDGER)
+    target_exists(spark, target)  # repair an interrupted swap first
+    _require_seen(spark, target)
     state = spark.read.parquet(target)
     seen = spark.read.parquet(target + "/" + _SEEN)
     victims = docs.select("doc_id", "text").join(
@@ -288,10 +262,7 @@ def purge_docs(
     tombs = read_ids_or_empty(spark, target + "/" + TOMBSTONES).unionByName(
         docs.select("doc_id").distinct()
     ).distinct()
-    tmp = target + "._tmp-purge"
-    merged.write.mode("overwrite").parquet(tmp)
-    keep_seen.write.mode("overwrite").parquet(tmp + "/" + _SEEN)
-    tombs.write.mode("overwrite").parquet(tmp + "/" + TOMBSTONES)
-    write_applied_into(spark, tmp, applied_max, _LEDGER)
-    _fs_swap(spark, tmp, target)
+    rewrite_target(
+        spark, target, "purge", merged, {_SEEN: keep_seen, TOMBSTONES: tombs}
+    )
     return n_purged

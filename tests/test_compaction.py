@@ -34,8 +34,7 @@ def test_compact_merges_small_files_content_identical(spark, tmp_path):
     assert stats["files_after"] == 1  # sf0.001 orders << 128 MB
     assert stats["rows"] == len(before)
     assert _rows(spark, target) == before  # content byte-identical
-    assert not os.path.exists(target + "._old")
-    assert not os.path.exists(target + "._compact-tmp")
+    assert os.listdir(tmp_path) == ["t"]  # no ._old / temp version left
 
 
 def test_compact_shuffle_mode_and_rerun_stable(spark, tmp_path):
@@ -66,6 +65,32 @@ def test_compact_recovers_mid_swap_crash(spark, tmp_path):
     assert stats["rows"] == len(before)
     assert _rows(spark, target) == before
     assert not os.path.exists(target + "._old")
+
+
+def test_compact_keeps_side_relations(spark, tmp_path):
+    """A maintained target's ``_``-prefixed side relations (applied
+    ledger, tombstones) are invisible to the parquet read that feeds
+    the rewrite; compaction must carry them, or a replayed batch
+    re-applies and purged docs come back."""
+    from etl_pipeline_candy_store_spark.operators.ledger import (
+        read_max_applied,
+    )
+
+    target = str(tmp_path / "t")
+    spark.range(50).repartition(10).write.parquet(target)
+    spark.createDataFrame([(7,)], "batch_id long").write.parquet(
+        target + "/_applied"
+    )
+    spark.createDataFrame([(3,), (4,)], "doc_id long").write.parquet(
+        target + "/_purged_docs"
+    )
+
+    stats = compact_parquet(spark, target, target_mb=128)
+
+    assert stats["files_after"] == 1 and stats["rows"] == 50
+    assert read_max_applied(spark, target) == 7
+    assert _rows(spark, target + "/_purged_docs") == [(3,), (4,)]
+    assert spark.read.parquet(target).count() == 50
 
 
 def test_compact_partitioned_table_per_partition_swap(spark, tmp_path):

@@ -159,12 +159,10 @@ def test_purge_docs_physical_forget(spark, tmp_path):
     assert purge_docs(spark, target, victims) == 0  # idempotent
     # replay guard intact: the applied-batch ledger survived the swap
     from etl_pipeline_candy_store_spark.operators.ledger import (
-        _hadoop_fs,
         read_max_applied,
     )
 
-    jvm, fs = _hadoop_fs(spark, target)
-    assert read_max_applied(spark, fs, jvm, target, "_applied") >= 0
+    assert read_max_applied(spark, target) >= 0
 
 
 def test_purge_survives_redelivery(spark, tmp_path):

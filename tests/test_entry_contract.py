@@ -3,10 +3,6 @@ verify harness consumes."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import __spark_entry__ as entrymod
 
 

@@ -120,16 +120,14 @@ def test_forget_recovers_from_zero_row_ledger(spark, tmp_path):
     # a crash between the swap steps can leave a ledger parquet with
     # ZERO rows; that must read as "nothing applied" (recover and merge
     # the next delivery), not raise and permanently wedge the stream
-    from etl_pipeline_candy_store_spark.streaming.forget_stream import (
-        _LEDGER,
-    )
+    from etl_pipeline_candy_store_spark.operators.ledger import LEDGER_NAME
 
     state = str(tmp_path / "forget_zero_ledger")
     reqs = _requests(spark).localCheckpoint(eager=True)
     apply_forget_batch(reqs.limit(3), state, 0)
     spark.createDataFrame([], "batch_id long").coalesce(1).write.mode(
         "overwrite"
-    ).parquet(state + "/" + _LEDGER)
+    ).parquet(state + "/" + LEDGER_NAME)
     apply_forget_batch(reqs, state, 0)  # batch_id 0 again: must NOT skip
     got = {r["digest"] for r in read_tombstones(spark, state).collect()}
     assert got == {r["digest"] for r in reqs.collect()}

@@ -1,17 +1,23 @@
 """Shared ledger protocol (operators/ledger.py): the crash windows all
-four state families rely on, tested once against the module they now
+five state families rely on, tested once against the module they now
 share — commit-visibility-last, atomic applied cutover + repair,
-replay-safe batch reads, staged compaction commit/discard, and the
-in-target max-applied stamp."""
+replay-safe batch reads, staged compaction commit/discard, the
+swapped-target rewrite and the in-target max-applied commit."""
 
 from __future__ import annotations
 
+import ast
 import os
+import re
+import shutil
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
 from etl_pipeline_candy_store_spark.operators.ledger import (
+    LEDGER_NAME,
     _hadoop_fs,
+    commit_applied,
     commit_run,
     committed_runs,
     read_batch_state,
@@ -19,9 +25,9 @@ from etl_pipeline_candy_store_spark.operators.ledger import (
     read_run_state,
     repair_applied,
     repair_staged_compaction,
+    rewrite_target,
     staged_compact,
     swap_applied,
-    write_applied_into,
 )
 
 _SCHEMA = "k bigint, v string"
@@ -149,20 +155,121 @@ def test_staged_compact_commit_and_crash_windows(spark, tmp_path):
     assert spark.read.parquet(root).count() == 4
 
 
+def _ledger(spark, target, ids):
+    spark.createDataFrame([(i,) for i in ids], "batch_id long").coalesce(
+        1
+    ).write.mode("overwrite").parquet(f"{target}/{LEDGER_NAME}")
+
+
 def test_max_applied_stamp_survives_swap_and_recovers(spark, tmp_path):
     target = str(tmp_path / "rollup")
-    jvm, fs = _hadoop_fs(spark, target)
     # absent target / absent ledger -> -1 (externally-seeded target)
-    assert read_max_applied(spark, fs, jvm, target) == -1
+    assert read_max_applied(spark, target) == -1
     _frame(spark, [(1, "a")]).write.mode("overwrite").parquet(target)
-    assert read_max_applied(spark, fs, jvm, target) == -1
-    # stamp inside an unswapped version, then "swap" (here: in place)
-    write_applied_into(spark, target, 5)
-    assert read_max_applied(spark, fs, jvm, target) == 5
+    assert read_max_applied(spark, target) == -1
+    # a legacy multi-row ledger reads as the max of its rows
+    _ledger(spark, target, [3, 5, 4])
+    assert read_max_applied(spark, target) == 5
     # the ledger is invisible to parquet readers of the target
     assert spark.read.parquet(target).columns == ["k", "v"]
     # zero-row ledger (crash between swap steps) -> -1, not a wedge
-    spark.createDataFrame([], "batch_id long").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(target + "/_applied")
-    assert read_max_applied(spark, fs, jvm, target) == -1
+    _ledger(spark, target, [])
+    assert read_max_applied(spark, target) == -1
+
+
+def _tree(root):
+    """Every file under ``root`` with its bytes: byte-identity check."""
+    return {
+        str(p.relative_to(root)): p.read_bytes()
+        for p in sorted(Path(root).rglob("*"))
+        if p.is_file()
+    }
+
+
+def _rows(spark, path):
+    return sorted((r["k"], r["v"]) for r in spark.read.parquet(path).collect())
+
+
+def test_commit_applied_crash_windows(spark, tmp_path):
+    target = str(tmp_path / "t")
+    seen = []
+
+    def add(rows):
+        def merge(current):
+            seen.append(None if current is None else _rows(spark, target))
+            new = _frame(spark, rows)
+            return new if current is None else current.unionByName(new)
+
+        return merge
+
+    assert commit_applied(spark, target, 0, add([(1, "a")]))
+    assert read_max_applied(spark, target) == 0
+    # a side relation no merge returns (tombstones) survives every swap
+    _frame(spark, [(9, "t")]).write.parquet(f"{target}/_purged_docs")
+
+    # crash between the two renames: only <target>._old is left; the
+    # next commit restores it BEFORE its merge reads the current version
+    shutil.move(target, target + "._old")
+    assert commit_applied(spark, target, 1, add([(2, "b")]))
+    assert seen[-1] == [(1, "a")]
+    assert not os.path.exists(target + "._old")
+    assert _rows(spark, target) == [(1, "a"), (2, "b")]
+    assert read_max_applied(spark, target) == 1
+    assert _rows(spark, f"{target}/_purged_docs") == [(9, "t")]
+
+    # a replayed batch id is skipped: no merge, target byte-identical
+    before, n_merges = _tree(target), len(seen)
+    for replay in (0, 1):
+        assert not commit_applied(spark, target, replay, add([(3, "c")]))
+    assert len(seen) == n_merges
+    assert _tree(target) == before
+
+    # a purge-style rewrite (no ledger stamp) keeps the applied max and
+    # every side relation it does not replace
+    rewrite_target(
+        spark,
+        target,
+        "purge",
+        _frame(spark, [(2, "b")]),
+        {"_purged_docs": _frame(spark, [(1, "a"), (9, "t")])},
+    )
+    assert _rows(spark, target) == [(2, "b")]
+    assert read_max_applied(spark, target) == 1
+    assert _rows(spark, f"{target}/_purged_docs") == [(1, "a"), (9, "t")]
+    assert not [d for d in os.listdir(tmp_path) if d != "t"]
+
+
+# the swap protocol's names: only operators/ledger.py may use them
+_SWAP_NAMES = re.compile(r"_fs_swap|_fs_recover|write_applied_into|\._old\b")
+
+
+def test_swap_protocol_lives_only_in_ledger():
+    """No engine module other than operators/ledger.py renames a Hadoop
+    path, names the swap primitives or their ``._old`` suffix, or reads
+    the ``_applied`` ledger itself: one copy of the protocol."""
+    pkg = Path(__file__).resolve().parents[1] / "etl_pipeline_candy_store_spark"
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path.relative_to(pkg).as_posix() == "operators/ledger.py":
+            continue
+        src = path.read_text()
+        for node in ast.walk(ast.parse(src)):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "rename"
+                and not (
+                    isinstance(node.func.value, ast.Name)
+                    and node.func.value.id == "os"
+                )
+            ):
+                offenders.append(f"{path.name}:{node.lineno} .rename(")
+            if isinstance(node, ast.Constant) and node.value in (
+                LEDGER_NAME,
+                "/" + LEDGER_NAME,
+            ):
+                offenders.append(f"{path.name}:{node.lineno} {node.value!r}")
+        for n, line in enumerate(src.splitlines(), 1):
+            if _SWAP_NAMES.search(line):
+                offenders.append(f"{path.name}:{n} {line.strip()}")
+    assert offenders == []

@@ -267,9 +267,6 @@ def test_pre_r14_state_refuses_with_migration_error(spark, tmp_path):
     raw path-not-found AnalysisException the r14 code produced."""
     import pytest
 
-    from etl_pipeline_candy_store_spark.operators.ledger import (
-        write_applied_into,
-    )
     from etl_pipeline_candy_store_spark.streaming.winnow_stream import (
         purge_docs,
     )
@@ -285,7 +282,9 @@ def test_pre_r14_state_refuses_with_migration_error(spark, tmp_path):
     winnow_fingerprints(docs.select("doc_id", "text")).groupBy("wmin").agg(
         F.countDistinct("doc_id").cast("long").alias("df")
     ).write.parquet(target)
-    write_applied_into(spark, target, 0, "_applied")
+    spark.createDataFrame([(0,)], "batch_id long").write.parquet(
+        target + "/_applied"
+    )
 
     with pytest.raises(RuntimeError, match="predates the _seen_docs"):
         purge_docs(spark, target, docs.limit(1).select("doc_id", "text"))
