@@ -21,6 +21,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from etl_pipeline_candy_store_spark.functions.ngrams import ngrams
 from etl_pipeline_candy_store_spark.plans.catalog import load, register
 
 _JACCARD_THRESHOLD = 0.05
@@ -214,28 +215,16 @@ def q50_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _shingles(d: DataFrame) -> DataFrame:
-    """Distinct 3-token shingles per doc (empty set for docs < 3 tokens).
-
-    The token array is materialized ONCE per row before the transform —
-    inlining ``split()`` into the lambda re-evaluates it per index
-    (O(tokens²) per document; ~3× slower on this corpus).
-    """
-    sh = F.when(
-        F.size("toks") >= 3,
-        F.expr(
-            "transform(sequence(0, size(toks) - 3),"
-            " i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))"
+    """Distinct 3-token shingles per doc (none for docs < 3 tokens or
+    NULL text). Deduplicated row-locally by array_distinct: (doc_id,
+    shingle) duplicates occur only WITHIN a document, so no consumer
+    (q51/q226/q248/q91, the memoized pair chain) pays a global
+    .distinct()'s full-corpus exchange."""
+    return d.select(
+        "doc_id",
+        F.explode(F.array_distinct(ngrams(F.split("text", " "), 3))).alias(
+            "shingle"
         ),
-    ).otherwise(F.array().cast("array<string>"))
-    # r15: dedup row-locally (array_distinct before the explode) instead
-    # of a global .distinct() — (doc_id, shingle) duplicates can only
-    # occur WITHIN one document (doc_id is in the key), so the set is
-    # identical and the full-corpus (doc_id, shingle) exchange the
-    # distinct paid disappears from every consumer (q51/q226/q248/q91 +
-    # the memoized pair chain).
-    return (
-        d.select("doc_id", F.split("text", " ").alias("toks"))
-        .select("doc_id", F.explode(F.array_distinct(sh)).alias("shingle"))
     )
 
 
@@ -1406,18 +1395,7 @@ def q140_dup_span_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     d = load(spark, sf_dir, "documents")
-    sh = F.when(
-        F.size("toks") >= 3,
-        F.expr(
-            "transform(sequence(0, size(toks) - 3),"
-            " i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))"
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    ps = (
-        d.select("doc_id", F.split("text", " ").alias("toks"))
-        .select("doc_id", F.posexplode(sh).alias("pos0", "shingle"))
-        .select("doc_id", (F.col("pos0") + 1).cast("long").alias("pos"), "shingle")
-    )
+    ps = positional_shingles(d)
     # cross-doc test as a shingle-partitioned whole-frame min/max window:
     # ONE shingle-keyed exchange and a single evaluation of ps, where an
     # aggregate-then-join-back would shuffle ps twice and evaluate the
@@ -1522,19 +1500,13 @@ def q203_dup_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 def positional_shingles(d: DataFrame) -> DataFrame:
     """(doc_id, pos, shingle): every 1-based positional 3-shingle of
     (doc_id, text) — the relation q140 profiles, q203 scrubs over, and
-    the streaming span-scrub twin accumulates as its state key."""
-    sh = F.when(
-        F.size("toks") >= 3,
-        F.expr(
-            "transform(sequence(0, size(toks) - 3),"
-            " i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))"
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return (
-        d.select("doc_id", F.split("text", " ").alias("toks"))
-        .select("doc_id", F.posexplode(sh).alias("pos0", "shingle"))
-        .select("doc_id", (F.col("pos0") + 1).cast("long").alias("pos"), "shingle")
-    )
+    the streaming span-scrub twin accumulates as its state key. The
+    shingle at ``pos`` starts at token ``pos``; docs < 3 tokens and
+    NULL text emit no rows."""
+    grams = ngrams(F.split("text", " "), 3)
+    return d.select(
+        "doc_id", F.posexplode(grams).alias("pos0", "shingle")
+    ).select("doc_id", (F.col("pos0") + 1).cast("long").alias("pos"), "shingle")
 
 
 def covered_positions(marked_ps: DataFrame) -> DataFrame:

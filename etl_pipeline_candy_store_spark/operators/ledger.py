@@ -56,9 +56,9 @@ Crash-window contract (tested in ``tests/test_ledger.py``):
    before the first rename leaves the old version (the temp is
    overwritten by the retry); a crash between the renames leaves only
    ``<target>._old``, which ``target_exists`` (run first by every
-   rewrite and commit) renames back before anything merges; after the
-   second rename the new version, side relations included, is
-   complete.
+   rewrite, commit and :func:`read_target`) renames back before
+   anything merges or reads; after the second rename the new version,
+   side relations included, is complete.
 6. ``commit_applied`` stamps ``_applied`` inside the temp version, so
    a batch is either wholly applied and recorded or neither; a replayed
    ``batch_id <= max applied`` returns without touching the target.
@@ -323,6 +323,14 @@ def target_exists(spark: SparkSession, target: str) -> bool:
     swapped target makes first."""
     _fs_recover(spark, target.rstrip("/"))
     return fs_exists(spark, target)
+
+
+def read_target(spark: SparkSession, target: str) -> DataFrame:
+    """Read the current version of a swapped ``target``, repairing an
+    interrupted swap first: with only ``<target>._old`` left, a plain
+    ``spark.read.parquet`` raises PATH_NOT_FOUND."""
+    target_exists(spark, target)
+    return spark.read.parquet(target.rstrip("/"))
 
 
 def swap_children(spark: SparkSession, root: str) -> list[str]:

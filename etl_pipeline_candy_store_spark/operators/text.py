@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_pipeline_candy_store_spark.functions.ngrams import ngrams, shifted
 from etl_pipeline_candy_store_spark.plans.catalog import load, register
 
 # Tiny deterministic stopword lists for the language-ID heuristic.
@@ -563,38 +564,26 @@ LIMIT 50
 )
 def q97_context_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
-    # one array expression emitting both distance-1 and distance-2
-    # pairs per position, canonically ordered within each pair
-    # guard short docs: Spark's sequence(0, n) DESCENDS when n < 0
-    # (unlike DuckDB's empty range), so emit an empty array explicitly
-    pairs = F.expr(
-        "flatten(transform(sequence(1, 2), d -> "
-        " CASE WHEN size(toks) > d THEN "
-        "  transform(sequence(0, size(toks) - 1 - d), i -> "
-        "   struct(least(toks[i], toks[i + d]) AS tok_a, "
-        "          greatest(toks[i], toks[i + d]) AS tok_b)) "
-        " ELSE array() END))"
-    )
+    # one array per doc holding its distance-1 and distance-2 pairs,
+    # canonically ordered within each pair after the explode
+    toks = F.split("text", " ")
+    pairs = F.concat(shifted(toks, a=0, b=1), shifted(toks, a=0, b=2))
     return (
-        d.select(F.split("text", " ").alias("toks"))
-        .select(F.explode(pairs).alias("p"))
-        .select("p.tok_a", "p.tok_b")
+        d.select(F.explode(pairs).alias("p"))
+        .select(
+            F.least("p.a", "p.b").alias("tok_a"),
+            F.greatest("p.a", "p.b").alias("tok_b"),
+        )
         .groupBy("tok_a", "tok_b")
         .agg(F.count(F.lit(1)).alias("n_cooccur"))
         .orderBy(F.col("n_cooccur").desc(), "tok_a", "tok_b")
         .limit(50)
     )
 
-# row-local adjacent-bigram extraction over a `toks` array column and its
-# SQL twin — ONE copy of the pairing rule, shared by q107 (the LM table)
-# and q109 (per-doc scoring); a change to bigram semantics lands in both
-_BIGRAM_EXPR = (
-    "CASE WHEN size(toks) > 1 THEN "
-    " transform(sequence(0, size(toks) - 2), i -> "
-    "  struct(toks[i] AS w1, toks[i + 1] AS w2)) "
-    "ELSE array() END"
-)
-
+# row-local adjacent-bigram extraction (_doc_bigrams: the (w1, w2)
+# zip of the token array with itself shifted by one) and its SQL twin —
+# ONE copy of the pairing rule, shared by q107 (the LM table) and q109
+# (per-doc scoring); a change to bigram semantics lands in both
 _BIGRAM_CTES = """toks AS (
   SELECT doc_id, generate_subscripts(string_split(text, ' '), 1) AS pos,
          unnest(string_split(text, ' ')) AS tok
@@ -611,11 +600,9 @@ big AS (
 def _doc_bigrams(d: DataFrame) -> DataFrame:
     """(doc_id, w1, w2) adjacent pairs per document — the Spark twin of
     ``_BIGRAM_CTES``."""
-    return (
-        d.select("doc_id", F.split("text", " ").alias("toks"))
-        .select("doc_id", F.explode(F.expr(_BIGRAM_EXPR)).alias("b"))
-        .select("doc_id", "b.w1", "b.w2")
-    )
+    return d.select(
+        "doc_id", F.explode(shifted(F.split("text", " "), w1=0, w2=1)).alias("b")
+    ).select("doc_id", "b.w1", "b.w2")
 
 
 @register(
@@ -1089,30 +1076,20 @@ REP_DUP_TRIGRAM_MAX_MICROS = 400_000
 def repetition_signals(d: DataFrame) -> DataFrame:
     """q122's signals over any (doc_id, text) frame — reusable as a
     curation-pipeline gate. Documents shorter than a gram size
-    contribute zero for that signal (the NULLIF/COALESCE paths).
+    contribute zero for that signal (the NULLIF/COALESCE paths); NULL
+    text emits no row (the size >= 1 filter).
 
-    r15 plan: every signal is WITHIN-document, so nothing needs to
-    shuffle at all — the old explode + (doc_id, n, gram) aggregate +
-    per-doc aggregate (two keyed exchanges carrying gram strings) is
-    now a pure map: distinct counts are array_distinct sizes, and the
-    top-bigram count is the longest run in the sorted bigram array
-    (one row-local fold). Same integers exactly, including the
-    "no tokens -> no row" contract (the size >= 1 filter mirrors the
-    old explode emitting nothing). Measured 1.87s -> 0.87s interleaved
-    min-of-4 at sf0.1; 0 exchanges (was 2)."""
-    t = F.split("text", " ")
-    big = F.expr(
-        "transform(slice(t, 1, greatest(size(t) - 1, 0)),"
-        " (x, i) -> concat(x, ' ', t[i + 1]))"
-    )
-    tri = F.expr(
-        "transform(slice(t, 1, greatest(size(t) - 2, 0)),"
-        " (x, i) -> concat(x, ' ', t[i + 1], ' ', t[i + 2]))"
-    )
+    Every signal is WITHIN-document, so the plan is a pure map with
+    zero exchanges: the gram arrays come from :mod:`..functions.ngrams`
+    (linear even under the filter ``drop_repetitive`` pushes through
+    them), distinct counts are array_distinct sizes, and the top-bigram
+    count is the longest run in the sorted bigram array."""
     base = (
-        d.select("doc_id", t.alias("t"))
+        d.select("doc_id", F.split("text", " ").alias("t"))
         .filter(F.size("t") >= 1)
-        .select("doc_id", "t", big.alias("big"), tri.alias("tri"))
+        .select(
+            "doc_id", "t", ngrams("t", 2).alias("big"), ngrams("t", 3).alias("tri")
+        )
     )
     # longest equal-run in the sorted bigram array == max per-doc bigram
     # count. The '' init can never match a real bigram (every bigram
@@ -1244,14 +1221,9 @@ def _bpe_word_table(docs: DataFrame) -> DataFrame:
 
 
 def _bpe_top_pair(wc: DataFrame) -> DataFrame:
-    pairs = F.expr(
-        f"transform(sequence(0, size({_BPE_SYMS}) - 2), i -> "
-        f" struct(element_at({_BPE_SYMS}, i + 1) AS sym_a,"
-        f"        element_at({_BPE_SYMS}, i + 2) AS sym_b))"
-    )
+    pairs = shifted(F.expr(_BPE_SYMS), sym_a=0, sym_b=1)
     return (
-        wc.filter(F.expr(f"size({_BPE_SYMS}) >= 2"))
-        .select(F.explode(pairs).alias("p"), "n")
+        wc.select(F.explode(pairs).alias("p"), "n")
         .select("p.sym_a", "p.sym_b", "n")
         .groupBy("sym_a", "sym_b")
         .agg(F.sum("n").cast("long").alias("n_pair"))

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_candy_store_spark.operators.ledger import commit_applied
+from etl_pipeline_candy_store_spark.operators.ledger import commit_applied, read_target
 from etl_pipeline_candy_store_spark.operators.merge import merge_sum
 
 
@@ -87,7 +87,7 @@ def read_scrubbed(
         _segments,
     )
 
-    state = spark.read.parquet(target_path.rstrip("/"))
+    state = read_target(spark, target_path)
     boiler = state.filter(F.col("df") >= _BOILER_DF).select("sh")
     segs = _segments(docs.select("doc_id", "text")).withColumn(
         "sh", F.unhex(F.md5(F.col("seg_text").cast("binary")))

@@ -46,7 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_candy_store_spark.operators.ledger import commit_applied
+from etl_pipeline_candy_store_spark.operators.ledger import commit_applied, read_target
 from etl_pipeline_candy_store_spark.streaming.upsert_sink import (
     TOMBSTONES,
     purge_ids,
@@ -123,7 +123,7 @@ def read_containment_pairs(
         _containment_scored,
     )
 
-    state = spark.read.parquet(target_path.rstrip("/")).select(
+    state = read_target(spark, target_path).select(
         "doc_id", F.col("sh").alias("shingle")
     )
     card = state.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))

@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_candy_store_spark.operators.ledger import commit_applied
+from etl_pipeline_candy_store_spark.operators.ledger import commit_applied, read_target
 from etl_pipeline_candy_store_spark.operators.merge import merge_sum
 
 
@@ -77,7 +77,7 @@ def read_divergence(spark: SparkSession, target_path: str) -> DataFrame:
     """Derive the per-source TVD drift report from the maintained token
     counts — the identical arithmetic as batch q231, with the count
     relation read from state instead of recomputed."""
-    sc = spark.read.parquet(target_path.rstrip("/"))
+    sc = read_target(spark, target_path)
     st = sc.groupBy("source").agg(F.sum("c").cast("long").alias("s"))
     tt = sc.groupBy("tok").agg(F.sum("c").cast("long").alias("ct"))
     tot = sc.agg(F.sum("c").cast("long").alias("t"))

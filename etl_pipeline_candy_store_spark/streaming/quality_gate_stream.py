@@ -41,7 +41,7 @@ from etl_pipeline_candy_store_spark.operators.corpus_curation import (
     _GATE_FRAC_DEN,
     _GATE_FRAC_NUM,
 )
-from etl_pipeline_candy_store_spark.operators.ledger import commit_applied
+from etl_pipeline_candy_store_spark.operators.ledger import commit_applied, read_target
 from etl_pipeline_candy_store_spark.operators.merge import merge_sum
 
 
@@ -91,7 +91,7 @@ def read_gated(
     recomputed. Returns (doc_id, source, bin) for kept docs."""
     from pyspark.sql import Window
 
-    state = spark.read.parquet(target_path.rstrip("/"))
+    state = read_target(spark, target_path)
     stats = state.agg(
         F.min("score").alias("mn"), F.max("score").alias("mx")
     )

@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_candy_store_spark.operators.ledger import commit_applied
+from etl_pipeline_candy_store_spark.operators.ledger import commit_applied, read_target
 from etl_pipeline_candy_store_spark.streaming.upsert_sink import (
     TOMBSTONES,
     purge_ids,
@@ -103,7 +103,7 @@ def read_simhash_pairs(spark: SparkSession, target_path: str) -> DataFrame:
         banded_capped_pairs,
     )
 
-    return banded_capped_pairs(spark.read.parquet(target_path.rstrip("/")))
+    return banded_capped_pairs(read_target(spark, target_path))
 
 
 def purge_docs(

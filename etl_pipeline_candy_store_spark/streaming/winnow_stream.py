@@ -58,6 +58,7 @@ from pyspark.sql import functions as F
 from etl_pipeline_candy_store_spark.operators.ledger import (
     commit_applied,
     fs_exists,
+    read_target,
     rewrite_target,
     target_exists,
 )
@@ -174,7 +175,7 @@ def read_winnow_pairs(
         winnow_fingerprints,
     )
 
-    state = spark.read.parquet(target_path.rstrip("/"))
+    state = read_target(spark, target_path)
     band = state.filter(
         F.col("df").between(_WINNOW_DF_MIN, _WINNOW_DF_MAX)
     ).select("wmin")

@@ -85,6 +85,93 @@ def test_sample_deterministic_and_stratified(spark):
     assert all(h < 128 for *_, h in a)
 
 
+# Adversarial token streams the generated corpus never holds: NULL, '',
+# one and two tokens, leading/trailing/double spaces (empty tokens),
+# multibyte and combining characters, and one 5,000-token document.
+_ADVERSARIAL = [
+    (1, None),
+    (2, ""),
+    (3, "solo"),
+    (4, "a b"),
+    (5, " lead"),
+    (6, "trail "),
+    (7, "a  b"),
+    (8, "  "),
+    (9, "x  x  x"),
+    (10, "日本 語 日本 語 日本"),
+    (11, "cafe\u0301 cafe\u0301 café 😀 😀 😀"),
+    (12, " ".join(f"w{i % 37}" for i in range(5000))),
+    (13, "a b c a b c a b c d"),
+]
+
+
+def _py_signals(text):
+    """q122's three signals computed in plain Python over
+    ``text.split(" ")``."""
+    from collections import Counter
+
+    t = text.split(" ")
+    big = [" ".join(t[i : i + 2]) for i in range(len(t) - 1)]
+    tri = [" ".join(t[i : i + 3]) for i in range(len(t) - 2)]
+    top = max(Counter(big).values(), default=0)
+    return (
+        top * 1_000_000 // len(big) if big else 0,
+        (len(tri) - len(set(tri))) * 1_000_000 // len(tri) if tri else 0,
+        len(set(t)) * 1_000_000 // len(t),
+    )
+
+
+class TestNgramRule:
+    """functions/ngrams against plain Python slicing of
+    ``text.split(" ")`` on adversarial inputs."""
+
+    def _df(self, spark):
+        return spark.createDataFrame(_ADVERSARIAL, "doc_id long, text string")
+
+    def test_ngrams_match_python_slices(self, spark):
+        from etl_pipeline_candy_store_spark.functions.ngrams import ngrams
+
+        t = F.split("text", " ")
+        rows = (
+            self._df(spark)
+            .select("doc_id", *(ngrams(t, n).alias(f"g{n}") for n in (1, 2, 3)))
+            .collect()
+        )
+        texts = dict(_ADVERSARIAL)
+        assert len(rows) == len(_ADVERSARIAL)
+        for r in rows:
+            text = texts[r["doc_id"]]
+            for n in (1, 2, 3):
+                want = None
+                if text is not None:
+                    toks = text.split(" ")
+                    want = [
+                        " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
+                    ]
+                assert r[f"g{n}"] == want, (r["doc_id"], n)
+
+    def test_pairs_match_python_offsets(self, spark):
+        from etl_pipeline_candy_store_spark.functions.ngrams import shifted
+
+        t = F.split("text", " ")
+        rows = (
+            self._df(spark)
+            .select("doc_id", *(shifted(t, a=0, b=d).alias(f"p{d}") for d in (1, 2)))
+            .collect()
+        )
+        texts = dict(_ADVERSARIAL)
+        for r in rows:
+            text = texts[r["doc_id"]]
+            for d in (1, 2):
+                got = r[f"p{d}"]
+                if text is None:
+                    assert got is None
+                    continue
+                toks = text.split(" ")
+                want = [(toks[i], toks[i + d]) for i in range(len(toks) - d)]
+                assert [(p["a"], p["b"]) for p in got] == want, (r["doc_id"], d)
+
+
 class TestRepetitionSignalsEdges:
     """q122's gram-size edge cases: the synthetic corpus has no 1-2
     token docs, but a real crawl does — the NULLIF/COALESCE zero paths
@@ -125,3 +212,8 @@ class TestRepetitionSignalsEdges:
         got = self._run(spark, [(4, "a b c d")])
         # all grams distinct: top bigram 1/3, dup trigrams 0, unique 1.0
         assert got[4] == (333_333, 0, 1_000_000)
+
+    def test_adversarial_inputs_match_python(self, spark):
+        got = self._run(spark, _ADVERSARIAL)
+        want = {i: _py_signals(text) for i, text in _ADVERSARIAL if text is not None}
+        assert got == want

@@ -7,11 +7,13 @@ swapped-target rewrite and the in-target max-applied commit."""
 from __future__ import annotations
 
 import ast
+import importlib
 import os
 import re
 import shutil
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_pipeline_candy_store_spark.operators.ledger import (
@@ -273,3 +275,48 @@ def test_swap_protocol_lives_only_in_ledger():
             if _SWAP_NAMES.search(line):
                 offenders.append(f"{path.name}:{n} {line.strip()}")
     assert offenders == []
+
+
+# (twin module, its per-batch state builder, reader, reader takes docs)
+_SWAPPED_READERS = [
+    ("drift_stream", "_batch_counts", "read_divergence", False),
+    ("winnow_stream", "_batch_fpcounts", "read_winnow_pairs", True),
+    ("simhash_stream", "_batch_signatures", "read_simhash_pairs", False),
+    ("containment_stream", "_batch_shingles", "read_containment_pairs", False),
+    ("boilerplate_stream", "_batch_segcounts", "read_scrubbed", True),
+    ("quality_gate_stream", "_batch_counts", "read_gated", True),
+]
+
+
+@pytest.mark.parametrize(
+    "module,build,reader,takes_docs",
+    _SWAPPED_READERS,
+    ids=[r[2] for r in _SWAPPED_READERS],
+)
+def test_reader_repairs_interrupted_swap(
+    spark, tmp_path, module, build, reader, takes_docs
+):
+    """A crash between a swap's two renames leaves only
+    ``<target>._old``; every reader of a swapped target restores it and
+    reads the same rows, instead of failing with PATH_NOT_FOUND until
+    the next micro-batch repairs it."""
+    mod = importlib.import_module(f"etl_pipeline_candy_store_spark.streaming.{module}")
+    # 24 docs: one shared 8-token header segment (boilerplate), then a
+    # body each doc shares with exactly one other (near-dup pairs)
+    bodies = [[f"t{i}x{k}" for k in range(32)] for i in range(12)]
+    texts = [" ".join(["hdr"] * 8 + body) for body in bodies]
+    docs = spark.createDataFrame(
+        [(i, f"src{i % 3}", texts[i % 12]) for i in range(24)],
+        "doc_id long, source string, text string",
+    )
+    target = str(tmp_path / "target")
+    getattr(mod, build)(docs).write.parquet(target)
+
+    def read():
+        args = (spark, target, docs) if takes_docs else (spark, target)
+        return sorted(map(str, getattr(mod, reader)(*args).collect()))
+
+    want = read()
+    os.rename(target, target + "._old")
+    assert read() == want
+    assert os.path.isdir(target) and not os.path.exists(target + "._old")

@@ -280,14 +280,76 @@ def test_vocab_growth_no_corpus_global_window(spark):
     assert "windowspecdefinition(bkt" in plan
 
 
-def test_repetition_signals_two_keyed_shuffles(spark):
-    # q122: one corpus explode builds all three gram sizes row-locally;
-    # the only exchanges are the two doc-keyed aggregations (formatted
-    # plans print each node twice: tree + detail)
+def test_repetition_signals_pure_map(spark):
+    # q122: every signal is within-document, so the plan is a pure map
+    # over the scan — gram arrays and their counts are row-local array
+    # expressions: no explode, no shuffle, no join
     plan = _plan(spark, "q122_repetition_signals")
-    assert plan.count("Generate") <= 2          # one explode
-    assert plan.count("Exchange") <= 4          # two keyed shuffles
+    assert plan.count("Generate") == 0
+    assert plan.count("Exchange") == 0
     assert "Join" not in plan
+
+
+def test_no_lambda_indexes_an_array(spark):
+    # every gram / neighbour-pair builder zips shifted slices
+    # (functions/ngrams.py). A filter on its output is pushed through
+    # the projection, substituting split(text, ' ') for the token array;
+    # a lambda indexing that array (toks[i + 1], element_at(syms, i + 1))
+    # would then re-split the text per element. The optimized plan of
+    # each builder must hold no such index.
+    from pyspark.sql import functions as F
+
+    from etl_pipeline_candy_store_spark.operators.dedup import (
+        _shingles,
+        positional_shingles,
+    )
+    from etl_pipeline_candy_store_spark.operators.text import (
+        _bpe_top_pair,
+        _bpe_word_table,
+        _doc_bigrams,
+        repetition_signals,
+    )
+    from etl_pipeline_candy_store_spark.plans.curation_pipeline import (
+        drop_repetitive,
+    )
+    from tools.plan_audit import plan_facts
+
+    catalog._ensure_loaded()
+    d = spark.createDataFrame(
+        [(1, "a b c a b c d"), (2, None), (3, "x")], "doc_id long, text string"
+    )
+    built = {
+        "_shingles": _shingles(d).filter(F.col("shingle") != "a b c"),
+        "positional_shingles": positional_shingles(d).filter(F.col("pos") > 1),
+        "_doc_bigrams": _doc_bigrams(d).filter(F.col("w1") != "a"),
+        "repetition_signals": repetition_signals(d).filter(
+            F.col("top_bigram_frac_micros") > 0
+        ),
+        "_bpe_top_pair": _bpe_top_pair(_bpe_word_table(d)).filter(
+            F.col("n_pair") > 1
+        ),
+        "drop_repetitive": drop_repetitive(d),
+        "q97_context_pairs": catalog.REGISTRY["q97_context_pairs"]
+        .builder(spark, SF)
+        .filter(F.col("n_cooccur") > 1),
+        "q140_dup_span_profile": catalog.REGISTRY["q140_dup_span_profile"]
+        .builder(spark, SF)
+        .filter(F.col("long_dup")),
+    }
+
+    def lambda_index(df):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return plan_facts(plan)["lambda_index"]
+
+    # the lint sees both hand-written forms it forbids
+    t = d.select(F.split("text", " ").alias("t"))
+    for form in ("t[i + 1]", "element_at(t, i + 1)"):
+        old = t.select(
+            F.expr(f"transform(sequence(0, size(t) - 2), i -> {form})").alias("g")
+        )
+        assert lambda_index(old.filter(F.size("g") > 1)) > 0, form
+    found = {name: lambda_index(df) for name, df in built.items()}
+    assert found == dict.fromkeys(built, 0)
 
 
 def test_cross_source_matrix_no_pair_scan(spark):

@@ -20,6 +20,41 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from bench import HEADLINE  # single source of the headline list
 
 
+_LAMBDA_VAR = re.compile(r"\blambda \w+#\d+")
+# ``a[idx]``: the bracket follows the array expression directly, unlike
+# the "[" of a node's attribute list ("Project [", "Output [2]: [")
+_GET_ITEM = re.compile(r"(?<=[\w)])\[([^\[\]]*)\]")
+
+
+def _element_at_indexes(plan: str) -> list[str]:
+    """The index argument of every ``element_at(array, index, ...)``."""
+    out = []
+    for m in re.finditer(r"\belement_at\(", plan):
+        depth, start, args = 0, m.end(), []
+        for j in range(m.end(), len(plan)):
+            c = plan[j]
+            if c in "([":
+                depth += 1
+            elif c in ")]" and depth:
+                depth -= 1
+            elif c == ")" or (c == "," and not depth):
+                args.append(plan[start:j])
+                start = j + 1
+                if c == ")":
+                    break
+        out.extend(args[1:2])
+    return out
+
+
+def lambda_indexes(plan: str) -> int:
+    """Array reads whose index holds a lambda variable (``toks[i + 1]``,
+    ``element_at(syms, i + 1)``). When the array is defined outside the
+    lambda, the optimizer can inline it there and re-evaluate it per
+    element (see ``functions/ngrams.py``)."""
+    idx = _GET_ITEM.findall(plan) + _element_at_indexes(plan)
+    return sum(1 for i in idx if _LAMBDA_VAR.search(i))
+
+
 def plan_facts(plan: str) -> dict[str, object]:
     # formatted plans print each node in the tree AND the detail section;
     # counting the tree lines (leading "N) ") avoids double counting
@@ -40,6 +75,7 @@ def plan_facts(plan: str) -> dict[str, object]:
             re.findall(r"windowspecdefinition\(\w+#\d+L? (?:ASC|DESC)", plan)
         ),
         "pushed": len(re.findall(r"PushedFilters: \[[^\]]", plan)),
+        "lambda_index": lambda_indexes(plan),
     }
 
 
