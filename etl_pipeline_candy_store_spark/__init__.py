@@ -3,9 +3,10 @@
 Brand-new engine with the query/data-processing capabilities of the
 reference ``medhhaa/ETL-Pipeline-Candy-Store`` (a driver-side row-loop ETL
 pipeline), re-expressed Spark-first: declarative DataFrame/SQL plans for
-everything relational, and exactly two custom ``applyInPandas`` operators
-(sequential inventory allocation, per-series forecasting) for the pieces
-Catalyst cannot express. See ``SURVEY.md`` for the operator inventory this
+everything relational, and two Arrow-batched pandas operators for the
+pieces Catalyst cannot express: sequential inventory allocation (one
+``mapInPandas`` pass over key-partitioned, sorted partitions) and
+per-series forecasting (``groupBy(metric).applyInPandas``). See ``SURVEY.md`` for the operator inventory this
 package implements.
 """
 

@@ -10,15 +10,17 @@ diverges as soon as one line cancels.
 
 Spark-first design: stock of product A never affects product B, so the
 only sequential dependency is *within* a product key. We therefore
-``groupBy(key).applyInPandas`` — parallel across keys (scales with the
-number of distinct products, i.e. perfectly at 100 TB where the dimension
-is wide), sequential inside a key (the semantic requirement, not an
-implementation shortcut). The reference instead runs ONE Python loop over
+``repartition(key)`` + ``sortWithinPartitions(key, seq)`` + one
+``mapInPandas`` pass per partition — parallel across keys (scales with
+the number of distinct products, i.e. perfectly at 100 TB where the
+dimension is wide), sequential inside a key (the semantic requirement,
+not an implementation shortcut). The reference instead runs ONE Python loop over
 ALL collected rows on the driver (``src/data_processor.py:389``).
 
 Scale posture:
 - one shuffle on the key column (same cost as any keyed aggregation);
-- Arrow batches in/out; the per-group loop is a tight numpy int loop;
+- Arrow batches in/out; the per-partition loop is a tight numpy int
+  loop whose remaining-stock state carries across batches;
 - skewed keys (one product with billions of lines) would serialize — for
   that shape, :func:`allocate_bucketed` (below) splits each key into
   contiguous sequence buckets and runs them in PARALLEL under an

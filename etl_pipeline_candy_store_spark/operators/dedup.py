@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import operator
 from collections.abc import Callable
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -31,17 +32,17 @@ _BANDS = 3  # rows-per-band = 2
 
 def fixpoint(
     state: DataFrame,
-    step: Callable[[DataFrame], DataFrame],
+    step: Callable[[DataFrame, tuple], DataFrame],
     metrics: list[Column],
     done: Callable[[tuple | None, tuple], bool],
     max_iters: int,
     what: str,
 ) -> DataFrame:
-    """Iterate ``state = step(state)`` to a fixed point with one eager
-    action per round: ``metrics`` (named aggregates) are observed on the
-    round's own ``localCheckpoint(eager=True)``, and
-    ``done(previous, current)`` reads convergence from those values —
-    no second action per round. The initial ``state`` is round 0 (its
+    """Iterate ``state = step(state, observed)`` to a fixed point with
+    one eager action per round: ``metrics`` (named aggregates) are
+    observed on the round's own ``localCheckpoint(eager=True)``, and
+    ``done(previous, current)`` and ``step`` read those values — no
+    second action per round. The initial ``state`` is round 0 (its
     previous value is None); raises after ``max_iters`` further rounds.
 
     Keep the observed frame's last operator in the checkpoint's result
@@ -54,7 +55,7 @@ def fixpoint(
         cur = tuple(obs.get.values())
         if done(prev, cur):
             return state
-        prev, state = cur, step(state)
+        prev, state = cur, step(state, cur)
     raise RuntimeError(f"{what} did not converge in {max_iters} rounds")
 
 
@@ -88,7 +89,7 @@ def connected_components(
         F.col("node").alias("prev"),
     )
 
-    def _round(labels: DataFrame) -> DataFrame:
+    def _round(labels: DataFrame, _: tuple) -> DataFrame:
         nbr = sym.join(labels, sym["b"] == labels["node"]).select(
             F.col("a").alias("node"), "label", F.lit(None).alias("prev")
         )
@@ -179,7 +180,7 @@ def connected_components_star(
         edges.select(
             F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
         ).distinct(),
-        lambda cur: _small_star(_large_star(cur)),
+        lambda cur, _: _small_star(_large_star(cur)),
         # a sum of xxhash64 values would trip ANSI long overflow
         [F.count(F.lit(1)).alias("n"), F.expr("bit_xor(xxhash64(u, v))").alias("h")],
         operator.eq,  # the round reproduced the previous edge set
@@ -1580,6 +1581,28 @@ def apply_span_removals(d: DataFrame, rem: DataFrame) -> DataFrame:
     )
 
 
+def _n_tokens(c: str) -> Column:
+    """Token count of a text column; '' is zero tokens (split says 1)."""
+    return (
+        F.when(F.col(c) == "", F.lit(0))
+        .otherwise(F.size(F.split(F.col(c), " ")))
+        .cast("long")
+    )
+
+
+def _scrub_step(state: DataFrame, observed: tuple) -> DataFrame:
+    """The span-scrub passes' one :func:`fixpoint` step over (doc_id,
+    text, pass[, n_removed]): one :func:`dup_span_scrub` pass, ``pass``
+    set from the observed ``max(pass)``. Only a state that carries
+    ``n_removed`` (the closure, not q204) computes removal counts."""
+    return dup_span_scrub(state).select(
+        "doc_id",
+        F.col("clean_text").alias("text"),
+        F.lit((observed[0] or 0) + 1).alias("pass"),
+        "n_removed",
+    ).select(*state.columns)
+
+
 def dup_span_scrub_fixpoint(
     docs: DataFrame, max_iter: int = 20
 ) -> DataFrame:
@@ -1595,55 +1618,50 @@ def dup_span_scrub_fixpoint(
     token count (it removes >= 3 tokens), so the loop converges in at
     most total-tokens/3 passes; real corpora need 1-3 (a pass-k
     removal requires a chain of k overlapping duplications — the
-    q140/q203 profile shows how rare k>=2 is). Each pass is the same
-    linear plan (one shingle-keyed exchange + doc-keyed anti-join);
-    `localCheckpoint` between passes truncates lineage exactly like
-    the star-contraction loop above, and the per-pass convergence
-    probe is one O(1) aggregate. Raises if max_iter passes still
-    remove tokens — same discipline as connected_components_star."""
-    cur = docs.select("doc_id", "text")
-    orig = cur.select(
-        "doc_id",
-        F.when(F.col("text") == "", F.lit(0))
-        .otherwise(F.size(F.split("text", " ")))
-        .cast("long")
-        .alias("n_tokens"),
-    ).localCheckpoint(eager=True)
-    removed_acc: DataFrame | None = None
-    n_passes = 0
-    for _ in range(max_iter):
-        out = dup_span_scrub(cur).localCheckpoint(eager=True)
-        pass_removed = out.agg(F.sum("n_removed")).collect()[0][0] or 0
-        if pass_removed == 0:
-            break
-        n_passes += 1
-        step = out.select("doc_id", F.col("n_removed").alias("r2"))
-        removed_acc = (
-            step.select("doc_id", F.col("r2").alias("r"))
-            if removed_acc is None
-            else removed_acc.join(step, "doc_id")
-            .select("doc_id", (F.col("r") + F.col("r2")).alias("r"))
+    q140/q203 profile shows how rare k>=2 is). The passes are q204's
+    :func:`_scrub_step` on :func:`fixpoint` (round 0 = the input): one
+    eager checkpoint per pass, stopping on an observed
+    ``sum(n_removed)`` of zero. The per-doc total sums the rounds'
+    checkpoints when read — carried in the state it would cost a
+    doc-keyed join and a shuffle per pass. Raises if max_iter passes
+    still remove tokens."""
+    rounds: list[DataFrame] = []  # every round's checkpoint, 0 = input
+
+    def _pass(state: DataFrame, observed: tuple) -> DataFrame:
+        rounds.append(state)
+        return _scrub_step(state, observed)
+
+    final = fixpoint(
+        docs.select(
+            "doc_id",
+            "text",
+            F.lit(0).alias("pass"),
+            F.lit(0).cast("long").alias("n_removed"),
+        ),
+        _pass,
+        [F.max("pass"), F.sum("n_removed")],
+        lambda prev, cur: prev is not None and not cur[1],
+        max_iter,
+        "dup_span_scrub_fixpoint",
+    )
+    removed = (
+        reduce(
+            DataFrame.unionByName, [r.select("doc_id", "n_removed") for r in rounds]
         )
-        cur = out.select("doc_id", F.col("clean_text").alias("text"))
-    else:
-        raise RuntimeError(
-            f"span scrub did not reach fixpoint in {max_iter} passes"
-        )
-    final = cur.select("doc_id", F.col("text").alias("clean_text"))
-    acc = (
-        removed_acc
-        if removed_acc is not None
-        else orig.select("doc_id", F.lit(0).alias("r"))
+        .groupBy("doc_id")
+        .agg(F.sum("n_removed").cast("long").alias("n_removed"))
     )
     return (
-        orig.join(acc, "doc_id", "left")
-        .join(final, "doc_id", "left")
-        .select(
+        rounds[0]
+        .select("doc_id", _n_tokens("text").alias("n_tokens"))
+        .join(removed, "doc_id")
+        .join(
+            final.select(
+                "doc_id",
+                F.col("text").alias("clean_text"),
+                (F.col("pass") - 1).cast("long").alias("n_passes"),
+            ),
             "doc_id",
-            "n_tokens",
-            F.coalesce("r", F.lit(0)).cast("long").alias("n_removed"),
-            F.coalesce("clean_text", F.lit("")).alias("clean_text"),
-            F.lit(n_passes).cast("long").alias("n_passes"),
         )
     )
 
@@ -1715,42 +1733,36 @@ FROM documents d JOIN src{_SCRUB_3PASS_PASSES} s USING (doc_id)
     "overlapping duplications; real corpora profile at 1-3, while "
     "this tiny-vocab synthetic corpus chains to ~6, which is exactly "
     "why the bound is a declared parameter and not an assumption). "
-    "dup_span_scrub_fixpoint iterates the same pass to TRUE closure "
-    "with an O(1) convergence probe per pass and is pytest-verified "
-    "against a pure-Python fixpoint reference, including a "
-    "constructed chain case where one pass provably != fixpoint; the "
+    "dup_span_scrub_fixpoint runs the same pass step on the same "
+    "fixpoint driver to TRUE closure and is pytest-verified against a "
+    "pure-Python fixpoint reference, including a constructed chain "
+    "case where one pass provably != fixpoint; the "
     "bounded form is what the oracle can check (DuckDB has no "
     "iterate-to-convergence), with both engines unrolling the "
     "IDENTICAL per-pass relation algebra so the oracle checks the "
     "composition, not just one pass. n_removed is cumulative "
     "(original minus surviving token count, '' counting as zero "
-    "tokens). Scale: 3x the q203 linear plan with lineage truncated "
-    "between passes on the Spark side; passes after convergence are "
-    "no-op scans of an already-clean relation.",
+    "tokens). Scale: 3x the q203 linear plan, one eager checkpoint per "
+    "pass; passes after convergence are no-op scans of an already-"
+    "clean relation.",
 )
 def q204_dup_span_scrub_3pass(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")
-    cur = d.select("doc_id", "text")
-    for _ in range(_SCRUB_3PASS_PASSES):
-        cur = (
-            dup_span_scrub(cur)
-            .select("doc_id", F.col("clean_text").alias("text"))
-            .localCheckpoint(eager=True)
-        )
-    n_of = lambda c: (  # noqa: E731 — '' is zero tokens, split says 1
-        F.when(F.col(c) == "", F.lit(0))
-        .otherwise(F.size(F.split(F.col(c), " ")))
-        .cast("long")
+    d = load(spark, sf_dir, "documents").select("doc_id", "text")
+    cur = fixpoint(  # round 0 is pass 1; stop after the last (NULL: no docs)
+        _scrub_step(d.withColumn("pass", F.lit(0)), (0,)),
+        _scrub_step,
+        [F.max("pass")],
+        lambda _, c: c[0] in (None, _SCRUB_3PASS_PASSES),
+        _SCRUB_3PASS_PASSES - 1,
+        "q204",
     )
-    return (
-        d.select("doc_id", "text")
-        .join(cur.select("doc_id", F.col("text").alias("clean_text")), "doc_id")
-        .select(
-            "doc_id",
-            n_of("text").alias("n_tokens"),
-            (n_of("text") - n_of("clean_text")).cast("long").alias("n_removed"),
-            "clean_text",
-        )
+    return d.join(
+        cur.select("doc_id", F.col("text").alias("clean_text")), "doc_id"
+    ).select(
+        "doc_id",
+        _n_tokens("text").alias("n_tokens"),
+        (_n_tokens("text") - _n_tokens("clean_text")).alias("n_removed"),
+        "clean_text",
     )
 
 
@@ -3189,12 +3201,12 @@ def exact_dup_spans(
     #     cap), partial-aggregated map-side before the only win-keyed
     #     exchange: a window present in millions of docs reaches its
     #     reduce task as #map_tasks partial rows, never millions.
-    #   survivors — wf left-semi joined to the banded wins on win: a
-    #     plain join that relies on AQE (a broadcast of the small band
-    #     side at runtime, or its skew-join split of a hot window's
-    #     probe rows); no salting.
-    #   inb — the occ cap re-applied to the survivors' positions as a
-    #     count window over (win, doc_id) (occ_keys only holds keys).
+    #   inb — wf left-semi joined to the occ-capped keys of the banded
+    #     wins on (win, doc_id): one plain join, no window, that relies
+    #     on AQE (a broadcast of the small key side at runtime, or its
+    #     skew-join split of a hot window's probe rows); no salting.
+    #     A (win, doc_id) group is banded as a whole, so its occ count
+    #     over the in-band positions is its occ_keys count.
     # Row-for-row semantics: positions whose (win, doc_id) count <=
     # occ_max and whose window's occ-capped distinct-doc count is in
     # [2, df_max].
@@ -3212,18 +3224,15 @@ def exact_dup_spans(
         .filter(F.col("df").between(2, df_max))
         .select("win")
     )
-    survivors = wf.join(band, "win", "left_semi")
-    occ_w = Window.partitionBy("win", "doc_id")
+    keys = occ_keys.join(band, "win", "left_semi")
     # lineage barrier: inb is the tiny in-band survivor relation, but
     # its lineage holds the checkpointed wf twice (band build + probe)
     # — without the barrier the a/b self-join would recompute the band
     # pipeline once PER SIDE (and q252 four times over).
     # ``checkpoint=False`` is for plan-shape evidence only (explain on
     # a checkpointed frame truncates at Scan ExistingRDD).
-    inb = (
-        survivors.withColumn("occ", F.count(F.lit(1)).over(occ_w))
-        .filter(F.col("occ") <= occ_max)
-        .select("doc_id", "pos", "win")
+    inb = wf.join(keys, ["win", "doc_id"], "left_semi").select(
+        "doc_id", "pos", "win"
     )
     if checkpoint:
         inb = inb.localCheckpoint(eager=False)

@@ -518,7 +518,7 @@ def kcore_fixpoint(
     e = edges.localCheckpoint(eager=True)
     return fixpoint(
         kcore_round(e, e.select(F.col("src").alias("node")).distinct(), k),
-        lambda cur: kcore_round(e, cur.select("node"), k),
+        lambda cur, _: kcore_round(e, cur.select("node"), k),
         [F.count(F.lit(1)).alias("n")],
         operator.eq,
         max_rounds,

@@ -11,6 +11,8 @@ hex (identical function both sides).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1242,24 +1244,29 @@ def _bpe_apply(wc: DataFrame, top: DataFrame) -> DataFrame:
     )
 
 
+def _bpe_merges(wc: DataFrame, n_merges: int) -> tuple[DataFrame, list[DataFrame]]:
+    """The one BPE merge loop: (word table, n_merges) -> (word table
+    after every merge, the per-step top pairs). Each round checkpoints
+    the word table it reads and its 1-row top pair; the last merge is
+    applied lazily, so a caller that only wants the merges
+    (:func:`bpe_train`) pays no action for it."""
+    tops = []
+    for _ in range(n_merges):
+        wc = wc.localCheckpoint(eager=True)
+        tops.append(_bpe_top_pair(wc).localCheckpoint(eager=True))
+        wc = _bpe_apply(wc, tops[-1])
+    return wc, tops
+
+
 def bpe_train(docs: DataFrame, n_merges: int) -> DataFrame:
     """Train ``n_merges`` BPE merges over the corpus; returns the merge
     table (step, sym_a, sym_b, n_pair) in training order. Ties break
     deterministically (count desc, then lexicographic), so training is
     reproducible across runs and engines. Each iteration's word table
     is locally checkpointed to keep lineage flat across merges."""
-    wc = _bpe_word_table(docs).localCheckpoint(eager=True)
-    steps = []
-    for k in range(1, n_merges + 1):
-        top = _bpe_top_pair(wc).localCheckpoint(eager=True)
-        steps.append(top.withColumn("step", F.lit(k).cast("int")))
-        if k < n_merges:
-            wc = _bpe_apply(wc, top).localCheckpoint(eager=True)
-    from functools import reduce
-
-    return reduce(lambda a, b: a.unionByName(b), steps).select(
-        "step", "sym_a", "sym_b", "n_pair"
-    )
+    _, tops = _bpe_merges(_bpe_word_table(docs), n_merges)
+    steps = [t.withColumn("step", F.lit(k).cast("int")) for k, t in enumerate(tops, 1)]
+    return reduce(DataFrame.unionByName, steps).select("step", "sym_a", "sym_b", "n_pair")
 
 
 def _bpe_oracle(n_merges: int) -> str:
@@ -1323,10 +1330,7 @@ def bpe_vocab(docs: DataFrame, n_merges: int, top: int = 20) -> DataFrame:
     to the word table, then rank the resulting symbols by corpus
     frequency. This is the artifact a tokenizer ships — after training,
     encoding any text is a row-local chain of the learned replaces."""
-    wc = _bpe_word_table(docs).localCheckpoint(eager=True)
-    for _ in range(n_merges):
-        top_pair = _bpe_top_pair(wc).localCheckpoint(eager=True)
-        wc = _bpe_apply(wc, top_pair).localCheckpoint(eager=True)
+    wc, _ = _bpe_merges(_bpe_word_table(docs), n_merges)
     return (
         wc.select(F.explode(F.expr(_BPE_SYMS)).alias("symbol"), "n")
         .groupBy("symbol")
@@ -1375,10 +1379,7 @@ def bpe_encode_counts(docs: DataFrame, n_merges: int) -> DataFrame:
     document row just joins its words to the precomputed map and sums
     symbol counts. n_subwords/n_chars is the compression the tokenizer
     achieves, a standard corpus-quality signal."""
-    wc = _bpe_word_table(docs).localCheckpoint(eager=True)
-    for _ in range(n_merges):
-        top_pair = _bpe_top_pair(wc).localCheckpoint(eager=True)
-        wc = _bpe_apply(wc, top_pair).localCheckpoint(eager=True)
+    wc, _ = _bpe_merges(_bpe_word_table(docs), n_merges)
     seg = wc.select(
         F.expr(f"array_join({_BPE_SYMS}, '')").alias("word"),
         F.expr(f"size({_BPE_SYMS})").alias("n_sub"),

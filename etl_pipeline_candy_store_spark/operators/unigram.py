@@ -56,9 +56,10 @@ surface alongside BPE (SURVEY.md §2 text-analysis rows).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from etl_pipeline_candy_store_spark.operators.dedup import fixpoint
 from etl_pipeline_candy_store_spark.plans.catalog import load, register
 
 _MAXW = 16  # words longer are excluded from training AND encoding
@@ -277,16 +278,33 @@ def unigram_encode_docs(docs: DataFrame) -> DataFrame:
     )
 
 
+def _usage(dp: DataFrame) -> DataFrame:
+    """E-step: (piece, n_viterbi), the corpus-weighted usage of every
+    word's Viterbi pieces (backward extraction over the solved best[])."""
+    return (
+        dp.select("word", "n", F.explode(F.expr(_BT)).alias("piece"))
+        .groupBy("piece")
+        .agg(F.sum("n").cast("long").alias("n_viterbi"))
+    )
+
+
+def _rebin(usage: DataFrame) -> DataFrame:
+    """M-step: (p, w) re-binned from usage, w = bin_len(n_viterbi) -
+    bin_len(total usage); pieces with no usage drop out (the prune)."""
+    utot = usage.agg(F.sum("n_viterbi").cast("long").alias("ut"))
+    return usage.crossJoin(F.broadcast(utot)).select(
+        F.col("piece").alias("p"),
+        (F.length(F.bin("n_viterbi")) - F.length(F.bin("ut"))).cast("long").alias("w"),
+    )
+
+
 def unigram_em_step(docs: DataFrame, top: int = 20) -> DataFrame:
     """One integer-staged hard-EM iteration: Viterbi-segment every
     distinct word (backward extraction over the solved best[]), count
     corpus-weighted piece usage, and re-bin scores from usage. Seed
     pieces the Viterbi never selects vanish (the EM prune)."""
     _, _, scored, dp = _dp_bundle(docs)
-    used = dp.select("word", "n", F.explode(F.expr(_BT)).alias("piece"))
-    usage = used.groupBy("piece").agg(
-        F.sum("n").cast("long").alias("n_viterbi")
-    )
+    usage = _usage(dp)
     utot = usage.agg(F.sum("n_viterbi").cast("long").alias("ut"))
     return (
         usage.join(
@@ -566,18 +584,7 @@ def unigram_encode_docs_em2(docs: DataFrame) -> DataFrame:
     per-DISTINCT-word over the once-checkpointed word table, and the
     corpus is touched exactly twice (word-table build + encode join)."""
     words, occ, _, dp1 = _dp_bundle(docs)
-    used = dp1.select("word", "n", F.explode(F.expr(_BT)).alias("piece"))
-    usage = used.groupBy("piece").agg(
-        F.sum("n").cast("long").alias("n_viterbi")
-    )
-    utot = usage.agg(F.sum("n_viterbi").cast("long").alias("ut"))
-    scored2 = usage.crossJoin(F.broadcast(utot)).select(
-        F.col("piece").alias("p"),
-        (F.length(F.bin("n_viterbi")) - F.length(F.bin("ut")))
-        .cast("long")
-        .alias("w"),
-    )
-    dp2 = _dp_with_scores(words, scored2, occ)
+    dp2 = _dp_with_scores(words, _rebin(_usage(dp1)), occ)
     final = "try_element_at(best, CAST(length(word)+1 AS INT))"
     enc2 = (
         dp2.select("word", F.expr(final).alias("f"))
@@ -726,91 +733,61 @@ def unigram_train(
     build) no matter how many iterations run; every per-iteration
     relation is vocab-sized and localCheckpointed so lineage stays flat.
 
+    Rounds run on :func:`~.dedup.fixpoint` as two eager checkpoints:
+    the segmentation, observing the trajectory stats, and the vocab
+    state (p, w, w_prev) — the full outer join of the previous and next
+    pieces — observing its size and exact changed-piece count.
+
     Log-likelihood: in pure-EM mode (no ``target_vocab``) each word's
     previous segmentation stays available to the next DP (its pieces
     were just counted), so corpus ll_bits is non-decreasing per
     iteration (tested); with a size target, pruning used pieces can
     lower it — that trade-off is the trajectory's story."""
-    spark = docs.sparkSession
-    words = _word_table(docs).localCheckpoint(eager=True)
-    # static across iterations: materialize the substring explode once,
-    # every EM round's DP reads it instead of re-deriving (r16)
-    occ = _occurrences(words).localCheckpoint(eager=True)
-    _, scored0 = seed_vocab(words, occ)
-    scored = scored0.select("p", "w").localCheckpoint(eager=True)
-    n_vocab = scored.count()
+    words, occ, scored, _ = _dp_bundle(docs)
     traj: list[dict] = []
-    rounds = exact_iters if exact_iters is not None else max_iters
-    converged = False
-    for it in range(1, rounds + 1):
-        # seg is consumed TWICE per round (the trajectory aggregate and
-        # the usage extraction): materialize it so the Viterbi fold —
-        # the round's dominant compute — runs once per round, not twice
-        # (r16; vocab-bounded rows, same discipline as words/occ/scored)
-        seg = _segmentable(
-            _dp_with_scores(words, scored, occ)
-        ).localCheckpoint(eager=True)
-        st = seg.agg(
-            F.sum("n").cast("long").alias("n_seg_words"),
-            F.sum(F.col("n") * F.col("f.k")).cast("long").alias("n_pieces"),
-            F.sum(F.col("n") * F.col("f.v")).cast("long").alias("ll_bits"),
-        ).collect()[0]
-        traj.append(
-            {
-                "iter": it,
-                "n_vocab": n_vocab,
-                "n_seg_words": st["n_seg_words"],
-                "n_pieces": st["n_pieces"],
-                "ll_bits": st["ll_bits"],
-            }
-        )
-        usage = (
-            seg.select("word", "n", F.explode(F.expr(_BT)).alias("piece"))
-            .groupBy("piece")
-            .agg(F.sum("n").cast("long").alias("n_viterbi"))
-        )
-        if target_vocab is not None:
-            keep = max(target_vocab, (n_vocab * 3) // 4)
-            usage = usage.orderBy(
-                F.col("n_viterbi").desc(), "piece"
-            ).limit(keep)
-        utot = usage.agg(F.sum("n_viterbi").cast("long").alias("ut"))
-        scored_next = (
-            usage.crossJoin(F.broadcast(utot))
-            .select(
-                F.col("piece").alias("p"),
-                (F.length(F.bin("n_viterbi")) - F.length(F.bin("ut")))
-                .cast("long")
-                .alias("w"),
+
+    def _em_round(state: DataFrame, observed: tuple) -> DataFrame:
+        n_vocab = observed[0]
+        live = state.where(F.col("w").isNotNull()).select("p", "w")
+        # seg is consumed TWICE per round (the trajectory stats and the
+        # usage extraction): materialize it so the Viterbi fold — the
+        # round's dominant compute — runs once per round
+        stats = Observation()
+        seg = (
+            _segmentable(_dp_with_scores(words, live, occ))
+            .observe(
+                stats,
+                F.sum("n").cast("long").alias("n_seg_words"),
+                F.sum(F.col("n") * F.col("f.k")).cast("long").alias("n_pieces"),
+                F.sum(F.col("n") * F.col("f.v")).cast("long").alias("ll_bits"),
             )
             .localCheckpoint(eager=True)
         )
-        n_next = scored_next.count()
-        if exact_iters is None:
-            if target_vocab is not None and n_next <= target_vocab:
-                scored, n_vocab = scored_next, n_next
-                converged = True
-                break
-            n_diff = (
-                scored.withColumnRenamed("w", "w_a")
-                .join(scored_next.withColumnRenamed("w", "w_b"), "p", "full")
-                .where(
-                    F.col("w_a").isNull()
-                    | F.col("w_b").isNull()
-                    | (F.col("w_a") != F.col("w_b"))
-                )
-                .count()
-            )
-            if n_diff == 0:
-                converged = True
-                break
-        scored, n_vocab = scored_next, n_next
-    if exact_iters is None and not converged:
-        raise RuntimeError(
-            f"unigram_train did not converge within {max_iters} iterations"
-            f" (vocab {n_vocab})"
+        traj.append({"iter": len(traj) + 1, "n_vocab": n_vocab, **stats.get})
+        usage = _usage(seg)
+        if target_vocab is not None:
+            keep = max(target_vocab, (n_vocab * 3) // 4)
+            usage = usage.orderBy(F.col("n_viterbi").desc(), "piece").limit(keep)
+        nxt = _rebin(usage)
+        return live.withColumnRenamed("w", "w_prev").join(nxt, "p", "full")
+
+    def _done(prev: tuple | None, cur: tuple) -> bool:
+        if exact_iters is not None:
+            return len(traj) == exact_iters
+        n_vocab, n_changed = cur
+        return prev is not None and (
+            not n_changed or (target_vocab is not None and n_vocab <= target_vocab)
         )
-    return scored, traj
+
+    state = fixpoint(
+        scored.select("p", "w", F.lit(None).cast("long").alias("w_prev")),
+        _em_round,
+        [F.count("w"), F.count_if(~F.col("w").eqNullSafe(F.col("w_prev")))],
+        _done,
+        exact_iters if exact_iters is not None else max_iters,
+        "unigram_train",
+    )
+    return state.where(F.col("w").isNotNull()).select("p", "w"), traj
 
 
 # --- q219 oracle: generation-3 CTE chain, the generalized pattern of

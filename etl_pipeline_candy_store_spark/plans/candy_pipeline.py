@@ -3,9 +3,11 @@
 Mirrors the DataProcessor surface (SURVEY §3.3): load dimensions →
 validate items → allocate inventory → derive orders / order_line_items /
 daily_summary / products_updated → forecast → write outputs. Every stage
-is a declarative DataFrame transformation except two ``applyInPandas``
-group functions: the ST1 allocation (one group per product key) and the
-forecast fit (one group per metric, plans/forecast.py). The reference
+is a declarative DataFrame transformation except two pandas functions:
+the ST1 allocation (``repartition`` on the product key +
+``sortWithinPartitions`` + one ``mapInPandas`` pass per partition) and
+the forecast fit (one ``applyInPandas`` group per metric,
+plans/forecast.py). The reference
 instead collect()s each day to the driver and loops rows
 (src/data_processor.py:389-465).
 

@@ -282,19 +282,25 @@ def test_span_scrub_fixpoint_chain_case(spark):
     assert one[3] != fix[3][1]
 
 
-def test_span_scrub_fixpoint_matches_python_reference(spark):
+def _random_texts() -> dict[int, str]:
     import random
 
+    rng = random.Random(17)
+    vocab = [f"w{i}" for i in range(10)]  # tiny vocab -> chained dups
+    return {
+        i: " ".join(rng.choice(vocab) for _ in range(rng.randint(3, 20)))
+        for i in range(1, 26)
+    }
+
+
+def _check_scrub_fixpoint(spark, texts: dict[int, str]) -> int:
+    """Assert dup_span_scrub_fixpoint equals the pure-Python reference
+    on ``texts`` and leaves no cross-doc duplicated 3-shingle; returns
+    the reference's removal-pass count."""
     from etl_pipeline_candy_store_spark.operators.dedup import (
         dup_span_scrub_fixpoint,
     )
 
-    rng = random.Random(17)
-    vocab = [f"w{i}" for i in range(10)]  # tiny vocab -> chained dups
-    texts = {
-        i: " ".join(rng.choice(vocab) for _ in range(rng.randint(3, 20)))
-        for i in range(1, 26)
-    }
     want, want_passes = _py_scrub_fixpoint(texts)
     got_rows = dup_span_scrub_fixpoint(
         spark.createDataFrame(
@@ -314,9 +320,21 @@ def test_span_scrub_fixpoint_matches_python_reference(spark):
         for i in range(len(ts) - 2):
             occ.setdefault(" ".join(ts[i : i + 3]), set()).add(d)
     assert all(len(ds) == 1 for ds in occ.values())
-    # non-vacuous: the tiny vocab really forced multi-pass removal
-    assert want_passes >= 2
+    # non-vacuous: every input here removes tokens
     assert any(n for (_, n, _) in want.values())
+    return want_passes
+
+
+def test_span_scrub_fixpoint_matches_python_reference(spark):
+    # the tiny vocab really forces multi-pass removal
+    assert _check_scrub_fixpoint(spark, _random_texts()) >= 2
+    # irregular whitespace: "x y z " keeps an empty last token, which
+    # is all that survives of doc 2 (3 of 4 tokens removed); in
+    # "a  b c" the empty token sits inside both shingles
+    _check_scrub_fixpoint(spark, {1: "x y z", 2: "x y z "})
+    _check_scrub_fixpoint(spark, {3: "a  b c", 4: "a  b c d"})
+    assert _py_scrub_fixpoint({1: "x y z", 2: "x y z "})[0][2] == (4, 3, "")
+    assert _py_scrub_fixpoint({3: "a  b c", 4: "a  b c d"})[0][4] == (5, 4, "d")
 
 
 def test_span_scrub_fixpoint_max_iter_raises(spark):
